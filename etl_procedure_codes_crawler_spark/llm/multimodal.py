@@ -317,8 +317,8 @@ def _png_synth_batches(
     batches: "Iterator[pd.DataFrame]", width: int, corrupt_every: int
 ) -> "Iterator[pd.DataFrame]":
     """The PNG synthesis as a plain batch generator - shared by
-    documents_as_png and the fused image_hashes_from_documents
-    (round 13, guide 4.1)."""
+    documents_as_png and the fused two-view operator
+    (video.document_media_identities)."""
     import struct
     import zlib
 
@@ -852,7 +852,8 @@ def _image_hash_batches(
     batches: Iterator[pd.DataFrame], decoder, hasher, content_key: bool
 ) -> Iterator[pd.DataFrame]:
     """The decode+hash pass as a plain batch generator — shared by
-    image_hashes and the fused image_hashes_from_documents."""
+    image_hashes and the fused two-view operator
+    (video.document_media_identities)."""
     import hashlib
 
     for batch in batches:
@@ -891,41 +892,6 @@ def _image_hash_batches(
         # also carried a corrupt image)
         out["phash"] = pd.array(out["phash"], dtype="Int64")
         yield pd.DataFrame(out)
-
-
-def image_hashes_from_documents(
-    documents: DataFrame,
-    width: int = PNG_WIDTH,
-    corrupt_every: int = PNG_CORRUPT_EVERY,
-    decoder=default_decoder,
-    method: str = "dhash",
-    content_key: bool = False,
-) -> DataFrame:
-    """FUSED PNG synthesis + decode/hash (round 13, guide §4.1):
-    composing :func:`_png_synth_batches` and
-    :func:`_image_hash_batches` inside ONE mapInPandas keeps the PNG
-    payload bytes from ever crossing the Python↔JVM boundary — the
-    two-operator form (``image_hashes(documents_as_png(df))``)
-    pipelines in one Spark stage but still Arrow-serializes every
-    payload out of the synth pass and back into the hash pass. Same
-    row functions, so the output is identical row-for-row."""
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _image_hash_batches(
-            _png_synth_batches(batches, width, corrupt_every),
-            decoder,
-            hasher,
-            content_key,
-        )
-
-    return documents.select("doc_id", "text", "source").mapInPandas(
-        run, schema=PHASH_CONTENT_SCHEMA if content_key else PHASH_SCHEMA
-    )
 
 
 def image_near_dup_pairs(

@@ -124,7 +124,7 @@ def append_passage_counts(
     id_col: str = "doc_id",
     batch_id: str | None = None,
     chunks: DataFrame | None = None,
-) -> int:
+) -> None:
     """Append one count segment covering ``docs`` — (fp, distinct-doc
     count) within the batch, keyed by ``batch_id``.
 
@@ -138,7 +138,8 @@ def append_passage_counts(
     it; otherwise the id derives deterministically from the offered
     document-id set. The caller must still offer each document
     exactly once across DISTINCT batches (ingest gates' id
-    anti-join). Returns the segment's row count.
+    anti-join). A batch with no passages appends an empty part, which
+    the read path ignores.
 
     ``chunks``: a precomputed :func:`..dedup.passage_rows` relation
     for ``docs`` at the store's block size — callers that both count
@@ -154,17 +155,16 @@ def append_passage_counts(
         # meta read is one whole job per batch on the streaming path
         meta = load_passage_freq_meta(spark, path)
         chunks = passage_rows(docs, meta["block"], text_col, id_col)
-    seg = (
+    # written straight from its plan, unpinned: ``docs``/``chunks``
+    # never derive from this store's segments, so the append cannot
+    # change its own input
+    (
         chunks
         .groupBy("fp")
         .agg(F.countDistinct("id").cast("bigint").alias("df"))
         .select(F.lit(batch_id).alias("batch_id"), "fp", "df")
-        .localCheckpoint(eager=True)  # lineage must not read the append
+        .write.mode("append").parquet(_segments_path(path))
     )
-    n = seg.count()
-    if n:
-        seg.write.mode("append").parquet(_segments_path(path))
-    return n
 
 
 def read_passage_freqs(spark: SparkSession, path: str) -> DataFrame:

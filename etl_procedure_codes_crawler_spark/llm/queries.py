@@ -8601,8 +8601,12 @@ def streaming_unified_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     fires where the image gate cannot), boilerplate strip at
     admission, per-source token budgets on CLEAN tokens, and KMV
     cardinality folding — with a per-batch per-source attrition row
-    committed alongside the six store updates. Both media gates use
-    candidates→content-verify, so every decision is deterministic.
+    committed alongside the six store updates. The first three gates
+    are one per-document verdict relation: a fused pass computes each
+    doc's text fingerprint and both media identities, and each gate
+    keeps the min id per exact key among the docs still eligible,
+    unless a store holds that key under another id — so every
+    decision is deterministic.
     Offered as one availableNow batch, the served funnel report
     (attrition sums + the KMV store's estimates) must hash-match the
     oracle's from-scratch SQL replay of the whole pipeline — the

@@ -47,9 +47,15 @@ from pyspark.sql.types import (
 from .multimodal import (
     MEDIA_SCHEMA,
     MP4_KEYFRAME_EVERY,
+    PNG_CORRUPT_EVERY,
+    PNG_WIDTH,
+    _image_hash_batches,
     _mp4_sample_sizes,
     _PHASH_METHODS,
+    _png_synth_batches,
     build_mp4_samples,
+    default_decoder,
+    dhash64,
     parse_mp4,
     sample_file_offsets,
 )
@@ -99,7 +105,7 @@ def _mjpeg_synth_batches(
 ) -> Iterator[pd.DataFrame]:
     """The MJPEG-in-MP4 synthesis as a plain batch generator —
     shared by documents_as_mjpeg_mp4 and the fused
-    clip_identity_from_documents (round 13, guide §4.1)."""
+    :func:`document_media_identities`."""
     for batch in batches:
         ids, payloads, mimes, sizes, sources = [], [], [], [], []
         for doc_id, text, source in zip(
@@ -606,7 +612,8 @@ def _clip_identity_batches(
     batches: Iterator[pd.DataFrame], hasher
 ) -> Iterator[pd.DataFrame]:
     """The clip-identity pass as a plain batch generator — shared by
-    clip_identity_hashes and the fused clip_identity_from_documents."""
+    clip_identity_hashes and the fused
+    :func:`document_media_identities`."""
     import hashlib
 
     from .jpeg import decode_jpeg
@@ -655,39 +662,74 @@ def _clip_identity_batches(
         yield pd.DataFrame(out)
 
 
-def clip_identity_from_documents(
-    documents: DataFrame,
-    width: int = VIDEO_FRAME_WIDTH,
-    max_frames: int = VIDEO_MAX_FRAMES,
-    corrupt_container_every: int = VIDEO_CORRUPT_CONTAINER_EVERY,
-    corrupt_sample_every: int = VIDEO_CORRUPT_SAMPLE_EVERY,
-    method: str = "dhash",
-) -> DataFrame:
-    """FUSED synthesis + identity (round 13, guide §4.1): composing
-    :func:`_mjpeg_synth_batches` and :func:`_clip_identity_batches`
-    inside ONE mapInPandas keeps the clip payload bytes from ever
-    crossing the Python↔JVM boundary — the two-operator form
-    (``clip_identity_hashes(documents_as_mjpeg_mp4(df))``) pipelines
-    in one Spark stage but still Arrow-serializes every payload out
-    of the synth pass and back into the identity pass. Same row
-    functions, so the output is identical row-for-row."""
-    if method not in _PHASH_METHODS:
-        raise ValueError(
-            f"unknown method {method!r}; pick from {sorted(_PHASH_METHODS)}"
-        )
-    hasher = _PHASH_METHODS[method]
+#: the two views' identity columns, appended to the pass-through
+#: columns by :func:`document_media_identities`
+MEDIA_IDENTITY_FIELDS = [
+    StructField("image_phash", LongType()),
+    StructField("image_sha", StringType()),
+    StructField("clip_phash", LongType()),
+    StructField("clip_sha", StringType()),
+]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _clip_identity_batches(
-            _mjpeg_synth_batches(
-                batches, width, max_frames,
-                corrupt_container_every, corrupt_sample_every,
+
+def _media_identity_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    """The two-view identity pass as a plain batch generator (see
+    :func:`document_media_identities`): the PNG view runs
+    ``_png_synth_batches`` → ``_image_hash_batches``, the clip view
+    ``_mjpeg_synth_batches`` → ``_clip_identity_batches``, both per
+    batch, so the payloads never leave the worker."""
+
+    def view(batch: pd.DataFrame, col: str) -> list[pd.DataFrame]:
+        return [pd.DataFrame(
+            {"doc_id": batch["doc_id"], "text": batch[col], "source": None}
+        )]
+
+    for batch in batches:
+        batch = batch.reset_index(drop=True)
+        image = next(_image_hash_batches(
+            _png_synth_batches(
+                view(batch, "image_text"), PNG_WIDTH, PNG_CORRUPT_EVERY
             ),
-            hasher,
-        )
+            default_decoder, dhash64, True,
+        ))
+        clip = next(_clip_identity_batches(
+            _mjpeg_synth_batches(
+                view(batch, "clip_text"), VIDEO_FRAME_WIDTH, VIDEO_MAX_FRAMES,
+                VIDEO_CORRUPT_CONTAINER_EVERY, VIDEO_CORRUPT_SAMPLE_EVERY,
+            ),
+            dhash64,
+        ))
+        out = batch.drop(columns=["image_text", "clip_text"])
+        out["image_phash"] = image["phash"].array
+        out["image_sha"] = image["content_sha"].array
+        out["clip_phash"] = clip["phash"].array
+        out["clip_sha"] = clip["content_sha"].array
+        yield out
 
-    return documents.select("doc_id", "text", "source").mapInPandas(
-        run, schema=CLIP_IDENTITY_SCHEMA
+
+def document_media_identities(documents: DataFrame) -> DataFrame:
+    """Both media identities of every document in ONE mapInPandas: the
+    PNG view of ``image_text`` (documents_as_png, decoded + dHashed +
+    pixel-sha'd as in ``image_hashes(..., content_key=True)``) and the
+    MJPEG-in-MP4 clip view of ``clip_text`` (documents_as_mjpeg_mp4,
+    identified as in :func:`clip_identity_hashes`). The payloads never
+    cross the Python↔JVM boundary, and both views share one pass over
+    the documents. ``documents`` needs ``doc_id`` (it drives the
+    corruption schedules); every column other than the two view texts
+    passes through, followed by (image_phash, image_sha, clip_phash,
+    clip_sha). A view without identity (undecodable PNG, unparseable
+    container or any undecodable keyframe) has NULL phash and sha.
+    The same row functions as the two-operator forms, so each view's
+    (phash, sha) is identical row for row."""
+    keep = [
+        f for f in documents.schema.fields
+        if f.name not in ("image_text", "clip_text")
+    ]
+    return documents.mapInPandas(
+        _media_identity_batches,
+        schema=StructType(keep + MEDIA_IDENTITY_FIELDS),
     )
 
 

@@ -8,28 +8,34 @@ in a single ``foreachBatch`` sink with per-batch per-source attrition
 accounting, the streaming twin of the ``llm_corpus_prep_multimodal``
 batch capstone.
 
-Admission pipeline per micro-batch (order is the policy):
+Admission pipeline per micro-batch (order is the policy). Gates 1, 2
+and 2b are decided together as one pinned per-document VERDICT
+relation (:func:`admission_verdict`), built on one fused Python pass
+that computes both media identities of every arrived document next to
+its JVM-side text fingerprint:
 
-1. **exact content dedup** — intra-batch min-id per normalized-text
-   fingerprint, then rejection against the persisted fingerprint
-   store (same-id store rows are ignored, so crash replays never
-   self-reject);
-2. **media near-dup** — each doc's media view (default: a real PNG of
-   its first 8 tokens — the re-hosted-image-different-caption case
-   exact text dedup cannot see) is decoded + perceptually hashed in
-   one Arrow pass; CANDIDATES come from the 4-band hamming join
-   (intra-batch and against the persisted media store) and a doc is
-   rejected ONLY on exact decoded-content match (the
-   candidates→verify discipline that makes the gate decision
-   deterministic and DuckDB-expressible). Undecodable media admits
-   the doc — no perceptual identity, and the exact gate already held;
-2b. **video near-dup** (round 11) — each image-gate survivor's clip
-   view (a real MJPEG-in-MP4 of its first 3 tokens — coarser than
-   the PNG class, the re-hosted-preview-clip case the image gate
-   cannot pair) is keyframe-decoded; candidates come from the same
-   4-band hamming join on the first keyframe's dHash, and rejection
-   requires exact clip-content match. A clip has identity only if
-   its container parses AND every keyframe decodes;
+1. **exact content dedup** — a doc survives (``ex_ok``) if it is the
+   min id of its normalized-text fingerprint class in the batch and
+   the persisted fingerprint store holds no row of that class under
+   a DIFFERENT id (same-id store rows are the batch's own
+   crash-replayed commits, so replays never self-reject);
+2. **media near-dup** — each doc's media view is a real PNG of its
+   first 8 tokens (the re-hosted-image-different-caption case exact
+   text dedup cannot see), decoded + dHashed + pixel-sha'd. Among the
+   ``ex_ok`` docs WITH an identity, the min id per decoded-content
+   sha survives, again unless the persisted media store holds that
+   sha under a different id (``md_ok``). Exact content equality is
+   the whole decision — equal content implies hamming 0, so no
+   hamming candidate join is needed — which keeps the gate
+   deterministic and DuckDB-expressible. Undecodable media admits the
+   doc (no perceptual identity; the exact gate already held);
+2b. **video near-dup** — the same rule over the ``md_ok`` docs' clip
+   view (a real MJPEG-in-MP4 of the first 3 tokens — coarser than the
+   PNG class, the re-hosted-preview-clip case the image gate cannot
+   pair), keyed by the full clip payload's sha (``vd_ok``). A clip has
+   identity only if its container parses AND every keyframe decodes.
+   Each window ranges over the docs still eligible, so a doc rejected
+   by an earlier gate can never make a later-gate twin lose;
 3. **boilerplate strip at admission** — the batch's passage counts
    land in the frequency store under the durable (gate, batch) key,
    then each surviving doc is stripped against the store's cumulative
@@ -45,22 +51,28 @@ Admission pipeline per micro-batch (order is the policy):
 
 Crash contract: every store write precedes the warehouse append, and
 every store has its own replay idempotency (fingerprint/media/video
-ignore
-same-id rows, passage counts are batch-keyed with read-side dedup,
-budget stats exclude the batch's own key, KMV minima are idempotent,
-the attrition row is a run-id partition REPLACE) — so any crash
+ignore same-id rows and append only keys they do not hold, passage
+counts are batch-keyed with read-side dedup, budget stats exclude the
+batch's own key, KMV minima are idempotent, the attrition row is a
+run-id partition REPLACE) — so any crash
 interleaving replays to the identical accepted set and identical
 store state, and the warehouse id anti-join makes the data append
 exactly-once.
 
 Scale shape: gates 1, 2, 2b and 5 operate on hash relations (32-byte
-fingerprints, 64-bit phashes + shas, 60-bit minima) — document text
+fingerprints, 64-bit phashes + shas, 60-bit minima; each store is
+probed as a per-key (min id, max id) aggregate) — document text
 shuffles only for the passage count/strip (one batch-sized exchange)
 and the final append; the consumed-budget read and the sketch serve
-are metadata-sized.
+are metadata-sized. The survivors carry their verdict keys and
+store flags forward, so the three hash-store commits are projections
+of the accepted relation and the attrition row is one groupBy over
+the verdict joined with it.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -127,139 +139,141 @@ def create_unified_stores(
     return paths
 
 
-def png_prefix_media_hashes(
-    docs: DataFrame,
-    prefix_tokens: int = MEDIA_PREFIX_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The default media view: a real PNG of the doc's leading tokens,
-    synthesized + decoded + dHashed + content-sha'd in one FUSED Arrow
-    pass (multimodal.image_hashes_from_documents — round 13, guide
-    §4.1: the payload bytes never cross the Python↔JVM boundary).
-    Returns (media_id, phash, content_sha, decode_error)."""
-    from ..llm import multimodal as MM
-
-    view = docs.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.concat_ws(
-            " ", F.slice(T.tokens(text_col), 1, prefix_tokens)
-        ).alias("text"),
-        F.lit("unified").alias("source"),
-    )
-    return MM.image_hashes_from_documents(view, content_key=True)
-
-
-def mjpeg_prefix_video_hashes(
-    docs: DataFrame,
-    prefix_tokens: int = VIDEO_PREFIX_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The video view (round 11, gate 2b): a real MJPEG-in-MP4 clip of
-    the doc's leading tokens (llm/video.py), keyframe-decoded in one
-    Arrow pass. Returns (media_id, phash, content_sha, decode_error):
-
-    - phash = the FIRST keyframe's dHash — one 64-bit signature per
-      clip, riding the same 4-band hamming candidate machinery;
-    - content_sha = sha256 of the FULL clip payload. Exact payload
-      match implies exact decoded content, and for the deterministic
-      synthesis it holds iff the token prefixes match — which is what
-      lets the SQL oracle replay the decision as prefix-class min-id;
-    - a clip has perceptual identity ONLY if its container parses and
-      EVERY keyframe decodes (decode_error NULL). Corrupt containers
-      (every 50th doc) and broken keyframes (every other 37th) admit
-      — no identity, and the exact-text gate already held."""
-    from ..llm import video as V
-
-    view = docs.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.concat_ws(
-            " ", F.slice(T.tokens(text_col), 1, prefix_tokens)
-        ).alias("text"),
-        F.lit("unified").alias("source"),
-    )
-    # synthesis and identity run as ONE FUSED mapInPandas (round 13,
-    # guide §4.1) — payloads never leave the Python worker, where the
-    # round-11 two-operator chain still Arrow-serialized every clip
-    # out of the synth pass and back into the identity pass
-    # (clip_identity_hashes' docstring has the older history: the
-    # checkpoint+join+agg first cut cost three extra batch stages)
-    return V.clip_identity_from_documents(view)
-
-
 _FP_SCHEMA = "id bigint, fp string"
 _MEDIA_SCHEMA = "id bigint, phash bigint, content_sha string"
 
+#: verdict columns the survivors carry forward (prefixed ``_``, see
+#: :func:`verdict_survivors`)
+_CARRIED = ("fp", "fp_in", "m_phash", "m_sha", "m_in", "v_phash", "v_sha",
+            "v_in")
 
-def _content_dup_losers(
+
+def _head(text_col: str, n: int):
+    """The doc's first ``n`` whitespace tokens, space-joined."""
+    return F.concat_ws(" ", F.slice(T.tokens(text_col), 1, n))
+
+
+def admission_verdict(
     spark: SparkSession,
-    hashes: DataFrame,
-    store_path: str,
-    max_hamming: int,
-):
-    """One modality's candidates→content-verify rejection: intra-batch
-    losers (non-min-id per exact decoded/byte content among hamming
-    candidates) plus store losers (content matches a persisted row).
-    Returns (rejected_ids, store_df, identity_rows) — the shared
-    discipline of gates 2 (PNG) and 2b (video).
+    fresh: DataFrame,
+    paths: dict[str, str],
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    source_col: str = "source",
+) -> DataFrame:
+    """Gates 1, 2 and 2b for every document of ``fresh`` (unique ids)
+    against the fingerprint/media/video stores of ``paths``
+    (:func:`unified_store_paths`), as one relation:
 
-    Round 13 (guide §2.4, remove shuffles outright): the hamming band
-    join is PROVABLY REDUNDANT for this gate, because its verifier is
-    exact content equality — equal decoded content ⇒ equal pixels/PCM
-    ⇒ equal perceptual hash ⇒ hamming 0 ⇒ band agreement on every
-    band. So every pair the verify stage would accept is already a
-    content-equality pair, and the gate computes the verified result
-    DIRECTLY: intra-batch losers are the non-min-id rows per
-    content_sha (one groupBy of a hash relation, with map-side
-    combine), store losers are a sha equi-join against the persisted
-    rows. The old shape spent ~10 batch-sized exchanges per modality
-    (band explode + window cap + self-join + two sha joins + distinct,
-    then the between-join) to compute the same set; the band machinery
-    remains the right shape for PERCEPTUAL (non-exact) verifiers and
-    still runs in the standalone near-dup queries. Equivalence note:
-    this form is exactly the SQL oracle's min-id-per-content-class
-    rule; the old capped band join could additionally MISS a true
-    content twin inside a >max_bucket_size degenerate bucket when all
-    four bands overflow, so the direct form is never less exact.
-    Scale note: the groupBy is linear in the batch (no posting-list
-    self-join), so the degenerate-bucket quadratic bomb the cap
-    guarded against cannot occur here at all."""
-    # NULL content_sha rows are never rejected (the old equality joins
-    # could not match NULLs; a window partition WOULD group them) —
-    # decodable rows always carry a sha, so the filter is defensive
-    hv = hashes.filter(
-        F.col("phash").isNotNull() & F.col("content_sha").isNotNull()
-    )
-    min_id = F.min("id").over(Window.partitionBy("content_sha"))
-    intra_losers = (
-        hv.select("id", "content_sha")
-        .withColumn("_min_id", min_id)
-        .filter(F.col("id") != F.col("_min_id"))
-        .select("id")
-    )
-    store = read_table_or_empty(spark, store_path, _MEDIA_SCHEMA)
-    if store.isEmpty():
-        # first batch: nothing persisted to collide with — skip the
-        # store probe (a provably-empty probe side cannot reject
-        # anything; semantics identical)
-        return intra_losers, store, hv
-    store_losers = (
-        hv.join(intra_losers, "id", "left_anti")
-        .select("id", "content_sha")
-        .join(
-            store.select(
-                F.col("id").alias("_sid"),
-                F.col("content_sha").alias("content_sha"),
-            ),
-            "content_sha",
+        (id, <source_col>, fp, fp_in, m_phash, m_sha, m_in,
+         v_phash, v_sha, v_in, ex_ok, md_ok, vd_ok)
+
+    ``fp``/``m_*``/``v_*`` are the text fingerprint and the PNG-view
+    and clip-view identities (phash, content sha; NULL when the view
+    has no identity), all from one fused Python pass
+    (``video.document_media_identities``). ``ex_ok``/``md_ok``/
+    ``vd_ok`` are the nested gate survivals. Each gate is a min-id
+    window over the docs still eligible (the prior gate's survivors
+    that have an identity in this view — gate 1's NULL fingerprint is
+    a class of its own, as a groupBy would make it) plus one left join
+    against the store's per-key (min id, max id): a store row rejects
+    only if it carries a different id, because same-id rows are the
+    doc's own crash-replayed commit. ``*_in`` flags that the store
+    holds the key at all — for a surviving doc that can only be its
+    own id, so the commit appends exactly the keys with ``*_in``
+    false."""
+    from ..llm import video as V
+
+    ident = V.document_media_identities(
+        fresh.select(
+            F.col(id_col).cast("bigint").alias("doc_id"),
+            F.col(source_col),
+            T.fingerprint_sha256(text_col).alias("fp"),
+            _head(text_col, MEDIA_PREFIX_TOKENS).alias("image_text"),
+            _head(text_col, VIDEO_PREFIX_TOKENS).alias("clip_text"),
         )
-        .filter(F.col("id") != F.col("_sid"))
-        .select("id")
-        .distinct()
+    ).select(
+        F.col("doc_id").alias("id"),
+        source_col,
+        "fp",
+        F.col("image_phash").alias("m_phash"),
+        F.col("image_sha").alias("m_sha"),
+        F.col("clip_phash").alias("v_phash"),
+        F.col("clip_sha").alias("v_sha"),
     )
-    rejected = intra_losers.unionByName(store_losers).distinct()
-    return rejected, store, hv
+
+    def gate(rel, key, path, schema, store_key, prior, identity, ok, flag):
+        store = (
+            read_table_or_empty(spark, path, schema)
+            .groupBy(F.col(store_key).alias(key))
+            .agg(F.min("id").alias("_smin"), F.max("id").alias("_smax"))
+        )
+        eligible = prior & identity
+        winner = F.col("id") == F.min(F.when(eligible, F.col("id"))).over(
+            Window.partitionBy(key)
+        )
+        foreign = F.col("_smin").isNotNull() & (
+            (F.col("_smin") != F.col("id")) | (F.col("_smax") != F.col("id"))
+        )
+        return rel.join(store, key, "left").select(
+            *rel.columns,
+            (prior & (~identity | (winner & ~foreign))).alias(ok),
+            F.col("_smin").isNotNull().alias(flag),
+        )
+
+    def has(view: str):
+        phash, sha = F.col(f"{view}_phash"), F.col(f"{view}_sha")
+        return phash.isNotNull() & sha.isNotNull()
+
+    every = F.lit(True)
+    out = gate(ident, "fp", paths["fingerprints"], _FP_SCHEMA, "fp",
+               every, every, "ex_ok", "fp_in")
+    out = gate(out, "m_sha", paths["media"], _MEDIA_SCHEMA, "content_sha",
+               F.col("ex_ok"), has("m"), "md_ok", "m_in")
+    return gate(out, "v_sha", paths["video"], _MEDIA_SCHEMA, "content_sha",
+                F.col("md_ok"), has("v"), "vd_ok", "v_in")
+
+
+def verdict_survivors(
+    verdict: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """The docs that pass gates 1-2b, as ``(id_col, _fp, _fp_in,
+    _m_phash, _m_sha, _m_in, _v_phash, _v_sha, _v_in)`` — the keys and
+    store flags they carry forward to :func:`hash_store_appends`."""
+    return verdict.filter("vd_ok").select(
+        F.col("id").alias(id_col),
+        *[F.col(c).alias(f"_{c}") for c in _CARRIED],
+    )
+
+
+def hash_store_appends(
+    survivors: DataFrame, id_col: str = "doc_id"
+) -> dict[str, DataFrame]:
+    """The fingerprint/media/video store appends of the admitted
+    ``survivors`` (which carry the columns of :func:`verdict_survivors`)
+    as plain projections: an admitted doc survived every store probe, so
+    a key its store already holds (``_*_in``) can only be under its
+    own id — a crash replay's earlier commit, not appended again. A
+    NULL fingerprint never matches a store row and is not stored; a
+    view without identity has nothing to store."""
+    doc_id = F.col(id_col).cast("bigint").alias("id")
+
+    def hashes(view: str) -> DataFrame:
+        return survivors.filter(
+            F.col(f"_{view}_phash").isNotNull() & ~F.col(f"_{view}_in")
+        ).select(
+            doc_id,
+            F.col(f"_{view}_phash").alias("phash"),
+            F.col(f"_{view}_sha").alias("content_sha"),
+        )
+
+    return {
+        "fingerprints": survivors.filter(
+            F.col("_fp").isNotNull() & ~F.col("_fp_in")
+        ).select(doc_id, F.col("_fp").alias("fp")),
+        "media": hashes("m"),
+        "video": hashes("v"),
+    }
 
 
 def stream_ingest_unified(
@@ -271,9 +285,6 @@ def stream_ingest_unified(
     checkpoint_dir: str,
     budgets: dict[str, int],
     min_doc_freq: int = 5,
-    media_hasher=png_prefix_media_hashes,
-    video_hasher=mjpeg_prefix_video_hashes,
-    max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
@@ -286,11 +297,13 @@ def stream_ingest_unified(
     first. Returns the StreamingQuery handle; read the per-batch
     per-source funnel with :func:`unified_attrition_report`.
 
-    ``gate_shuffle_partitions``: the sink's ~15 exchanges are all
-    BATCH-sized (hash relations, per-source aggregates) — on a wide
-    session default each one pays pure task-scheduling latency; when
-    set, the sink body runs under this shuffle width (restored after
-    each batch), the same knob as the media gate."""
+    ``gate_shuffle_partitions``: every exchange in the sink is
+    BATCH-sized (the verdict relation's three store joins and
+    windows, the passage count/strip, the budget window, per-source
+    aggregates) — on a wide session default each one pays pure
+    task-scheduling latency; when set, the sink body runs under this
+    shuffle width (restored after each batch), the same knob as the
+    media gate."""
     paths = unified_store_paths(stores_root)
     gate_cache: dict[str, str] = {}
 
@@ -341,7 +354,11 @@ def stream_ingest_unified(
         _label("warehouse anti-join + batch pin")
         fs, hpath = hadoop_fs(spark, warehouse_path)
         if fs.exists(hpath(warehouse_path)):
-            existing_ids = spark.read.parquet(warehouse_path).select(id_col)
+            # the batch's own id field as the read schema: no
+            # schema-inference job over the warehouse footers
+            existing_ids = spark.read.schema(
+                StructType([rows.schema[id_col]])
+            ).parquet(warehouse_path)
             fresh = rows.join(existing_ids, id_col, "left_anti")
         else:
             fresh = rows
@@ -349,92 +366,20 @@ def stream_ingest_unified(
         if fresh.isEmpty():
             return
 
-        # ---- gate 1: exact content dedup --------------------------
+        # ---- gates 1, 2, 2b: one pinned verdict relation -----------
+        # one label for all three gates (the benchmark's phase map
+        # counts it as the exact-dedup phase)
         _label("gate 1: exact dedup")
-        fpd = fresh.select(
-            F.col(id_col).cast("bigint").alias("id"),
-            T.fingerprint_sha256(text_col).alias("fp"),
-        ).localCheckpoint(eager=True)
-        intra_keep = fpd.groupBy("fp").agg(F.min("id").alias("id"))
-        store_fp = read_table_or_empty(
-            spark, paths["fingerprints"], _FP_SCHEMA
-        )
-        if store_fp.isEmpty():
-            # first batch: nothing persisted to collide with — skip
-            # the store join + anti-join (round 13; the same shortcut
-            # the media gates already had; semantics identical)
-            exact_ids = intra_keep.select("id").localCheckpoint(
-                eager=True
-            )
-        else:
-            # same-id store rows are the batch's own crash-replayed
-            # appends — never grounds for rejection
-            store_hit = (
-                intra_keep.join(
-                    store_fp.select("fp", F.col("id").alias("_sid")), "fp"
-                )
-                .filter(F.col("_sid") != F.col("id"))
-                .select("id")
-                .distinct()
-            )
-            exact_ids = intra_keep.select("id").join(
-                store_hit, "id", "left_anti"
-            ).localCheckpoint(eager=True)
-
-        # ---- gate 2: media near-dup (candidates -> content verify) -
-        _label("gate 2: image hash pass")
-        exact_docs = fresh.join(
-            exact_ids.select(F.col("id").alias(id_col)), id_col, "left_semi"
-        )
-        hashes = (
-            media_hasher(exact_docs, id_col=id_col, text_col=text_col)
-            .select(
-                F.col("media_id").cast("bigint").alias("id"),
-                "phash",
-                "content_sha",
-                "decode_error",
-            )
-            .localCheckpoint(eager=True)  # one decode pass, reused 4x
-        )
-        _label("gate 2: image pair verify")
-        media_rejected, store_media, _ = _content_dup_losers(
-            spark, hashes, paths["media"], max_hamming
-        )
-        media_ids = exact_ids.join(
-            media_rejected, "id", "left_anti"
-        ).localCheckpoint(eager=True)
-
-        # ---- gate 2b: video near-dup on the image survivors --------
-        # same candidates->content-verify discipline over the clip
-        # view (its 3-token class is coarser than the PNG gate's 8, so
-        # it fires on docs the image gate cannot pair); undecodable
-        # clips carry no identity and admit
-        md_docs = fresh.join(
-            media_ids.select(F.col("id").alias(id_col)), id_col, "left_semi"
-        )
-        _label("gate 2b: clip hash pass")
-        vhashes = (
-            video_hasher(md_docs, id_col=id_col, text_col=text_col)
-            .select(
-                F.col("media_id").cast("bigint").alias("id"),
-                "phash",
-                "content_sha",
-                "decode_error",
-            )
-            .localCheckpoint(eager=True)
-        )
-        _label("gate 2b: clip pair verify")
-        video_rejected, store_video, _ = _content_dup_losers(
-            spark, vhashes, paths["video"], max_hamming
-        )
-        video_ids = media_ids.join(
-            video_rejected, "id", "left_anti"
+        verdict = admission_verdict(
+            spark, fresh, paths, id_col, text_col, source_col
         ).localCheckpoint(eager=True)
 
         # ---- gate 3: boilerplate strip at admission ----------------
+        # the survivors carry their verdict keys and store flags
+        # through gates 3 and 4 to the store commits
         _label("gate 3: passage count + strip")
         surv_docs = fresh.join(
-            video_ids.select(F.col("id").alias(id_col)), id_col, "left_semi"
+            verdict_survivors(verdict, id_col), id_col
         ).localCheckpoint(eager=True)
         from ..llm.dedup import passage_rows
 
@@ -514,47 +459,15 @@ def stream_ingest_unified(
                 F.col("n_tokens").cast("bigint").alias("n_tokens"),
             )
         )
-        acc_ids = accepted.select(
-            F.col(id_col).cast("bigint").alias("id")
-        )
-        # round 13: the three hash-store appends write UNCONDITIONALLY
-        # — each old isEmpty() guard computed the append's whole join
-        # lineage once just to decide whether to compute it again for
-        # the write (2 jobs per store where 1 suffices). An empty
-        # append commits an empty parquet part, which the read path
-        # (read_table_or_empty + dropDuplicates disciplines) already
-        # handles; replay idempotency is untouched (same anti-joins).
-        fp_new = fpd.join(acc_ids, "id", "left_semi")
-        fp_seen = read_table_or_empty(
-            spark, paths["fingerprints"], _FP_SCHEMA
-        ).select("id")
-        fp_new = fp_new.join(fp_seen, "id", "left_anti")
-        med_new = (
-            hashes.filter(F.col("phash").isNotNull())
-            .join(acc_ids, "id", "left_semi")
-            .select("id", "phash", "content_sha")
-            .join(store_media.select("id"), "id", "left_anti")
-        )
-        vid_new = (
-            vhashes.filter(F.col("phash").isNotNull())
-            .join(acc_ids, "id", "left_semi")
-            .select("id", "phash", "content_sha")
-            .join(store_video.select("id"), "id", "left_anti")
-        )
+        appends = hash_store_appends(accepted, id_col)
 
         def _commit_delta() -> None:
             delta.repartition(1).write.mode("append").parquet(
                 paths["budget_stats"]
             )
 
-        def _commit_fp() -> None:
-            fp_new.write.mode("append").parquet(paths["fingerprints"])
-
-        def _commit_media() -> None:
-            med_new.write.mode("append").parquet(paths["media"])
-
-        def _commit_video() -> None:
-            vid_new.write.mode("append").parquet(paths["video"])
+        def _commit_hashes(store: str) -> None:
+            appends[store].write.mode("append").parquet(paths[store])
 
         def _commit_kmv() -> None:
             if "kmv_meta" not in gate_cache:
@@ -566,7 +479,7 @@ def stream_ingest_unified(
                 meta=gate_cache["kmv_meta"],
             )
 
-        commits = [_commit_fp, _commit_media, _commit_video]
+        commits = [partial(_commit_hashes, store) for store in appends]
         if not batch_empty:
             commits += [_commit_delta, _commit_kmv]
 
@@ -587,63 +500,31 @@ def stream_ingest_unified(
 
         _label("attrition fold")
         # ---- attrition row (per source, this batch) ----------------
-        # ONE flags relation via UNION, folded by one groupBy(id) and
-        # attached to the arrival spine with ONE join (round 13; the
-        # round-12 fold still paid FOUR sequential per-id left joins —
-        # each its own exchange + AQE stage job on a fixed-cost-
-        # dominated sink; a union of the already-checkpointed id sets
-        # is exchange-free, so the whole fold is now 3 batch-sized
-        # shuffles: flag groupBy, spine join, source groupBy). Gate
-        # survivor sets are nested (accepted ⊆ video ⊆ media ⊆ exact ⊆
-        # arrived) and ids are unique per batch (the loud guard
-        # above), so max-per-id flags summed per source reproduce
-        # every funnel count exactly as the join form did.
-        src_of = fresh.select(
-            F.col(id_col).cast("bigint").alias("id"), source_col
-        )
-        _z = F.lit(0).cast("bigint")
+        # ONE groupBy over verdict ⟕ accepted: the verdict holds one
+        # row per arrived doc with its nested gate flags (accepted ⊆
+        # vd_ok ⊆ md_ok ⊆ ex_ok), so per-source flag sums are the
+        # funnel's survivor counts.
+        def _n(flag):
+            return F.sum(F.when(flag, 1).otherwise(0))
 
-        def _flag_rows(ids: DataFrame, which: str) -> DataFrame:
-            cols = {
-                "_ex": _z, "_md": _z, "_vd": _z,
-                "_acc": _z, "_rm": _z, "_tok": _z,
-            }
-            cols[which] = F.lit(1).cast("bigint")
-            return ids.select(
-                "id", *[c.alias(n) for n, c in cols.items()]
-            )
-
-        flag_union = (
-            _flag_rows(exact_ids, "_ex")
-            .unionByName(_flag_rows(media_ids, "_md"))
-            .unionByName(_flag_rows(video_ids, "_vd"))
-            .unionByName(
+        att = (
+            verdict.join(
                 accepted.select(
                     F.col(id_col).cast("bigint").alias("id"),
-                    _z.alias("_ex"), _z.alias("_md"), _z.alias("_vd"),
-                    F.lit(1).cast("bigint").alias("_acc"),
-                    F.col("n_removed").cast("bigint").alias("_rm"),
-                    F.col("_n_tok").cast("bigint").alias("_tok"),
-                )
+                    F.lit(True).alias("_acc"),
+                    F.col("n_removed").alias("_rm"),
+                    F.col("_n_tok").alias("_tok"),
+                ),
+                "id",
+                "left",
             )
-        )
-        flags = flag_union.groupBy("id").agg(
-            F.max("_ex").alias("_ex"),
-            F.max("_md").alias("_md"),
-            F.max("_vd").alias("_vd"),
-            F.max("_acc").alias("_acc"),
-            F.max("_rm").alias("_rm"),
-            F.max("_tok").alias("_tok"),
-        )
-        att = (
-            src_of.join(flags, "id", "left")
             .groupBy(source_col)
             .agg(
                 F.count(F.lit(1)).alias("n_arrived"),
-                F.sum(F.coalesce("_ex", F.lit(0))).alias("_ae"),
-                F.sum(F.coalesce("_md", F.lit(0))).alias("_am"),
-                F.sum(F.coalesce("_vd", F.lit(0))).alias("_av"),
-                F.sum(F.coalesce("_acc", F.lit(0))).alias("_aa"),
+                _n(F.col("ex_ok")).alias("_ae"),
+                _n(F.col("md_ok")).alias("_am"),
+                _n(F.col("vd_ok")).alias("_av"),
+                _n(F.col("_acc").isNotNull()).alias("_aa"),
                 F.sum(F.coalesce("_rm", F.lit(0))).alias("_rms"),
                 F.sum(F.coalesce("_tok", F.lit(0))).alias("_toks"),
             )
@@ -668,9 +549,9 @@ def stream_ingest_unified(
         # ---- warehouse append (exactly-once via the id anti-join) --
         _label("warehouse append")
         if not batch_empty:
-            accepted.drop("_n_tok").write.mode("append").option(
-                "compression", "snappy"
-            ).parquet(warehouse_path)
+            accepted.drop("_n_tok", *[f"_{c}" for c in _CARRIED]).write.mode(
+                "append"
+            ).option("compression", "snappy").parquet(warehouse_path)
         spark.sparkContext.setJobDescription(None)
 
     reader = spark.readStream.schema(schema)

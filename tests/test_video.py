@@ -183,3 +183,54 @@ class TestVideoNearDup:
         loose_pairs = {(r.video_a, r.video_b) for r in loose.collect()}
         assert (1, 2) not in strict_pairs
         assert (1, 2) in loose_pairs
+
+
+class TestDocumentMediaIdentities:
+    def test_matches_the_two_operator_forms_row_for_row(self, spark):
+        """The fused two-view pass equals, view by view,
+        image_hashes(documents_as_png(view), content_key=True) and
+        clip_identity_hashes(documents_as_mjpeg_mp4(view)) — including
+        the corrupt ids: 50/100 (truncated PNG and container) and
+        37/74 (broken first keyframe)."""
+        from etl_procedure_codes_crawler_spark.llm import multimodal as M
+
+        ids = list(range(1, 13)) + [37, 50, 74, 100]
+        docs = spark.createDataFrame(
+            [
+                (i, f"image words {i} tail{i} " * (i % 3 + 1),
+                 f"clip head {i % 4} more {i}", f"s{i % 2}")
+                for i in ids
+            ],
+            "doc_id long, image_text string, clip_text string, "
+            "source string",
+        ).repartition(2)
+        fused = {
+            r.doc_id: r
+            for r in V.document_media_identities(docs).collect()
+        }
+        assert set(fused) == set(ids)
+
+        def view(col):
+            return docs.select(
+                "doc_id", F.col(col).alias("text"), "source"
+            )
+
+        image = M.image_hashes(
+            M.documents_as_png(view("image_text")), content_key=True
+        ).collect()
+        clip = V.clip_identity_hashes(
+            V.documents_as_mjpeg_mp4(view("clip_text"))
+        ).collect()
+        for r in image:
+            f = fused[r.media_id]
+            assert (f.image_phash, f.image_sha) == (r.phash, r.content_sha)
+        for r in clip:
+            f = fused[r.media_id]
+            assert (f.clip_phash, f.clip_sha) == (r.phash, r.content_sha)
+        assert len(image) == len(clip) == len(ids)
+        # the pass-through column and the planted no-identity rows
+        assert all(fused[i].source == f"s{i % 2}" for i in ids)
+        no_image = {i for i in ids if fused[i].image_phash is None}
+        no_clip = {i for i in ids if fused[i].clip_sha is None}
+        assert no_image == {50, 100}
+        assert no_clip == {37, 50, 74, 100}

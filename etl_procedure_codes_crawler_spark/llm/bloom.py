@@ -33,11 +33,12 @@ tests in tests/test_bloom.py.
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import StoreVersionError, part, read_meta, write_meta
 
 _WORD = 64
 
@@ -160,12 +161,21 @@ def probe_bloom(
 # store needs no atomic swap on the hot path, only on compaction.
 
 
-def _meta_path(path: str) -> str:
-    return path.rstrip("/") + "/meta"
-
-
 def _segments_path(path: str) -> str:
-    return path.rstrip("/") + "/segments"
+    return part(path, "segments")
+
+
+class BloomStoreVersionError(StoreVersionError):
+    """Persisted store was built under an older probe scheme."""
+
+    kind = "bloom"
+    detail = (
+        "this code probes with the version-2 nonzero double-hash step "
+        "and would return false negatives against its bit array. "
+        "Rebuild the store from the guarded warehouse: "
+        "create_bloom_store(spark, path, n_items, fpr, "
+        "seed_df=warehouse, col=key)."
+    )
 
 
 def create_bloom_store(
@@ -181,10 +191,9 @@ def create_bloom_store(
     — a bloom that under-covers its warehouse would wrongly wave
     known keys through the definitely-new fast path."""
     m_bits, k = bloom_parameters(n_items, fpr)
-    meta = {"m_bits": m_bits, "k": k, "fpr": fpr, "version": 2}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(_meta_path(path))
+    meta = write_meta(
+        spark, path, {"m_bits": m_bits, "k": k, "fpr": fpr, "version": 2}
+    )
     if seed_df is not None:
         if col is None:
             raise ValueError("seed_df requires col")
@@ -192,10 +201,6 @@ def create_bloom_store(
             _segments_path(path)
         )
     return meta
-
-
-class BloomStoreVersionError(RuntimeError):
-    """Persisted store was built under an older probe scheme."""
 
 
 def load_bloom_meta(spark: SparkSession, path: str) -> dict:
@@ -208,20 +213,7 @@ def load_bloom_meta(spark: SparkSession, path: str) -> dict:
     silently re-append keys the warehouse already holds, breaking
     exactly-once — so a stale store is a hard error, not a warning.
     Rebuild with ``create_bloom_store(..., seed_df=warehouse)``."""
-    meta = json.loads(
-        spark.read.parquet(_meta_path(path)).first()["meta"]
-    )
-    version = meta.get("version", 1)
-    if version != 2:
-        raise BloomStoreVersionError(
-            f"bloom store at {path!r} is version {version}; this code "
-            "probes with the version-2 nonzero double-hash step and "
-            "would return false negatives against its bit array. "
-            "Rebuild the store from the guarded warehouse: "
-            "create_bloom_store(spark, path, n_items, fpr, "
-            "seed_df=warehouse, col=key)."
-        )
-    return meta
+    return read_meta(spark, path, (2,), BloomStoreVersionError)
 
 
 def read_bloom_store(spark: SparkSession, path: str) -> DataFrame:
@@ -229,12 +221,10 @@ def read_bloom_store(spark: SparkSession, path: str) -> DataFrame:
     to an empty relation — every probe returns definitely-new, which
     is correct for a store with nothing inserted."""
     from ..sources.parquet import read_table_or_empty
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    schema = StructType(
-        [StructField("word_idx", LongType()), StructField("bits", LongType())]
+    segs = read_table_or_empty(
+        spark, _segments_path(path), "word_idx bigint, bits bigint"
     )
-    segs = read_table_or_empty(spark, _segments_path(path), schema)
     return segs.groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))
 
 

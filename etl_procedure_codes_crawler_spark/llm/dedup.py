@@ -786,6 +786,16 @@ def lsh_bucket_stats(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
     )
 
 
+def band_key(values: list, hash_fn: str = "xx"):
+    """LSH bucket key of one band's minhash values: their xxhash64, or
+    in ``md5`` mode the md5-60 of the colon-joined values."""
+    if hash_fn == "md5":
+        return F.conv(
+            F.substring(F.md5(F.concat_ws(":", *values)), 1, 15), 16, 10
+        ).cast("long")
+    return F.xxhash64(*values)
+
+
 def minhash_buckets(
     df: DataFrame,
     text_col: str = "text",
@@ -802,21 +812,14 @@ def minhash_buckets(
     sig = minhash_signatures(
         df, text_col, id_col, k, bands * rows_per_band, hash_fn
     )
-
-    def bucket_of(band: int):
-        cols = [
-            F.col(f"h{band * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        if hash_fn == "md5":
-            return F.conv(
-                F.substring(F.md5(F.concat_ws(":", *cols)), 1, 15), 16, 10
-            ).cast("long")
-        return F.xxhash64(*cols)
-
     band_structs = [
         F.struct(
             F.lit(band).alias("band"),
-            bucket_of(band).alias("bucket"),
+            band_key(
+                [F.col(f"h{band * rows_per_band + r}")
+                 for r in range(rows_per_band)],
+                hash_fn,
+            ).alias("bucket"),
         )
         for band in range(bands)
     ]

@@ -32,14 +32,15 @@ noise matches and bounds every posting list, exactly as
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from ..sinks.parquet import compact_dataset
+from .store import append_new_ids, part, read_meta, write_meta
 
 #: polynomial base / modulus — shared with the DuckDB oracle spelling
 HASH_BASE = 257
@@ -49,6 +50,9 @@ HASH_MOD = 1_000_000_007
 #: characters guarantees a shared fingerprint
 KGRAM = 8
 WINDOW = 16
+
+#: the fingerprint part of a winnow store, ``<path>/fps``
+FPS = "fps"
 
 #: normalized-length cap so one pathological document cannot dominate
 #: a task; plenty for matching (a cap'd doc still yields ~cap/8
@@ -219,35 +223,22 @@ def build_winnow_store(
     material, quoted eval material, and lightly-edited eval material
     never enter a training corpus.
 
-    Layout: <path>/meta (hashing params — queries must fingerprint
-    with the STORE's geometry or the join is silently empty) and
-    <path>/fps with raw (id, fingerprint) rows. Fingerprints are
-    persisted UNCAPPED; the stop-fingerprint df-cap (``max_df`` rides
+    Layout: <path>/meta.json (hashing params, :mod:`.store` meta —
+    queries must fingerprint with the STORE's geometry or the join is
+    silently empty) and <path>/fps with raw (id, fingerprint) rows.
+    Fingerprints are persisted UNCAPPED; the stop-fingerprint df-cap (``max_df`` rides
     in meta) is applied at query time over the store-side counts —
     eval sets are curated and small, the recount is one cheap groupBy,
     and applying the cap at build time would silently drift as
     :func:`append_to_winnow_store` grows the store. Docs yielding no
     fingerprints are recorded as (id, NULL) marker rows so appends
     stay id-idempotent for them too."""
-    spark = eval_docs.sparkSession
     _fps_with_empty_markers(
         eval_docs, text_col, id_col, k, window, max_chars
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/fps")
-    meta = {
-        "k": k,
-        "window": window,
-        "max_chars": max_chars,
-        "max_df": max_df,
-    }
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/meta")
-
-
-def load_winnow_meta(spark: SparkSession, path: str) -> dict:
-    return json.loads(
-        spark.read.parquet(path.rstrip("/") + "/meta").first()["meta"]
-    )
+    ).write.mode("overwrite").parquet(part(path, FPS))
+    write_meta(eval_docs.sparkSession, path, {
+        "k": k, "window": window, "max_chars": max_chars, "max_df": max_df,
+    })
 
 
 def append_to_winnow_store(
@@ -260,24 +251,20 @@ def append_to_winnow_store(
     """Grow the eval store (new benchmark versions, new held-out
     splits): fingerprint docs not already present (anti-join on id,
     idempotent under replay) with the STORE's hashing geometry."""
-    meta = load_winnow_meta(spark, path)
-    existing = spark.read.parquet(path.rstrip("/") + "/fps").select(
-        F.col("id").alias(id_col)
-    ).distinct()
-    fresh = (
-        new_eval_docs.where(F.col(id_col).isNotNull())
-        .dropDuplicates([id_col])
-        .join(existing, id_col, "left_anti")
+    meta = read_meta(spark, path)
+    return append_new_ids(
+        spark,
+        part(path, FPS),
+        new_eval_docs,
+        id_col,
+        encode=lambda fresh: _fps_with_empty_markers(
+            fresh, text_col, id_col, meta["k"], meta["window"],
+            meta["max_chars"],
+        ),
+        # count DOCS (the empty-marker rows make every fresh doc
+        # visible here), not fingerprints
+        count=lambda fps: fps.select("id").distinct().count(),
     )
-    fps = _fps_with_empty_markers(
-        fresh, text_col, id_col, meta["k"], meta["window"], meta["max_chars"]
-    ).localCheckpoint(eager=True)  # lineage reads the path being appended
-    # count DOCS (the empty-marker rows make every fresh doc visible
-    # here), not fingerprints — the return value is docs appended
-    n = fps.select("id").distinct().count()
-    if n:
-        fps.write.mode("append").parquet(path.rstrip("/") + "/fps")
-    return n
 
 
 def contamination_against_store(
@@ -295,8 +282,8 @@ def contamination_against_store(
     leakage both surface. The batch is fingerprinted ONCE with the
     store's geometry; the join shuffles 8-byte fingerprints; the
     store-side df-cap (from meta) bounds every posting list."""
-    meta = load_winnow_meta(spark, path)
-    store = spark.read.parquet(path.rstrip("/") + "/fps").filter(
+    meta = read_meta(spark, path)
+    store = spark.read.parquet(part(path, FPS)).filter(
         F.col("fingerprint").isNotNull()  # drop the empty-doc markers
     )
     df_ok = (
@@ -329,6 +316,4 @@ def compact_winnow_store(
     (atomic swap, crash-healed on the next call); the fingerprint rows
     are a set, so query results are unaffected. Returns the new file
     count."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(spark, path.rstrip("/") + "/fps", target_file_mb)
+    return compact_dataset(spark, part(path, FPS), target_file_mb)

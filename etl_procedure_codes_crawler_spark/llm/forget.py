@@ -58,6 +58,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fingerprint import FPS
+from .index import CODED
+from .neardup_store import SIGNATURES
+from .store import part
+
 
 def _heal_pruned_forget(spark, fs, hpath, path: str) -> None:
     """Entry-time recovery for the file-pruned swap. The commit marker
@@ -304,7 +309,7 @@ def _forget_index_cells(
     from ..sinks.fsutil import checked_rename, hadoop_fs
     from ..sinks.versions import _data_files, _versions_dir, record_rewrite
 
-    coded_path = index_path.rstrip("/") + "/coded"
+    coded_path = part(index_path, CODED)
     fs, hpath = hadoop_fs(spark, coded_path)
     _heal_index_cells(fs, hpath, coded_path)
 
@@ -417,7 +422,7 @@ def forget_documents(
         # would re-raise forever instead of converging.
         from ..sinks.fsutil import hadoop_fs
 
-        coded_path = ann_index_path.rstrip("/") + "/coded"
+        coded_path = part(ann_index_path, CODED)
         fs, hpath = hadoop_fs(spark, coded_path)
         _heal_index_cells(fs, hpath, coded_path)
         no_survivors = (
@@ -438,11 +443,11 @@ def forget_documents(
         )
     if neardup_store_path is not None:
         removed["neardup_store"] = _forget_plain(
-            spark, neardup_store_path.rstrip("/") + "/signatures", key_ids, "id"
+            spark, part(neardup_store_path, SIGNATURES), key_ids, "id"
         )
     if winnow_store_path is not None:
         removed["winnow_store"] = _forget_plain(
-            spark, winnow_store_path.rstrip("/") + "/fps", key_ids, "id"
+            spark, part(winnow_store_path, FPS), key_ids, "id"
         )
     if ann_index_path is not None:
         removed["ann_index"] = _forget_index_cells(

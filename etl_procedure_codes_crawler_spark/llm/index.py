@@ -6,8 +6,9 @@ an index is BUILT once (train, encode, lay out), then queried many
 times and grown incrementally. This module persists the composed
 IVF+PQ structure as plain parquet:
 
-    <path>/meta/    one JSON row: centroids, codebook, m, sub, dims
-    <path>/coded/   (id, codes, vector) PARTITIONED BY cell
+    <path>/meta.json  centroids, codebook, m, sub, dims, quant_mode
+                      (:mod:`.store` meta)
+    <path>/coded/     (id, codes, vector) PARTITIONED BY cell
 
 The cell partitioning is the point: a query probes ``nprobe`` of
 ``num_centroids`` cells, and because probe cells are computed
@@ -26,8 +27,6 @@ pinned in tests/test_ann_index.py.
 """
 
 from __future__ import annotations
-
-import json
 
 import numpy as np
 
@@ -55,6 +54,11 @@ from .similarity import (
     with_norm,
     _dot,
 )
+from ..sinks.parquet import compact_dataset
+from .store import append_new_ids, part, read_meta, write_meta
+
+#: the cell-partitioned code part, ``<path>/coded``
+CODED = "coded"
 
 
 def build_ivfpq_index(
@@ -129,10 +133,10 @@ def build_ivfpq_index(
         coded.repartition(num_centroids, "cell")
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(path.rstrip("/") + "/coded")
+        .parquet(part(path, CODED))
     )
 
-    meta = {
+    write_meta(corpus.sparkSession, path, {
         "centroids": centroids.tolist(),
         "codebook": np.asarray(codebook).tolist(),
         "m": m,
@@ -142,21 +146,7 @@ def build_ivfpq_index(
         "dim": int(train_X.shape[1]),
         "seed": seed,
         "quant_mode": quant_mode,
-    }
-    spark = corpus.sparkSession
-    # repartition(1), not coalesce(1): a coalesced one-row local
-    # relation takes ~5 s per write in this session (AQE interplay)
-    # vs ~0.5 s through the one-row shuffle — measured, not guessed
-    spark.createDataFrame(
-        [(json.dumps(meta),)], "meta string"
-    ).repartition(1).write.mode("overwrite").parquet(
-        path.rstrip("/") + "/meta"
-    )
-
-
-def load_index_meta(spark: SparkSession, path: str) -> dict:
-    row = spark.read.parquet(path.rstrip("/") + "/meta").first()
-    return json.loads(row["meta"])
+    })
 
 
 def append_to_ivfpq_index(
@@ -170,7 +160,7 @@ def append_to_ivfpq_index(
     rewritten). Returns the number of vectors appended."""
     from .text import spread_small_input
 
-    meta = load_index_meta(spark, path)
+    meta = read_meta(spark, path)
     if meta.get("quant_mode", "float") == "md5":
         # encode with the STORED integer quantizers — same grid the
         # build used, so append == rebuild for identical inputs
@@ -187,36 +177,26 @@ def append_to_ivfpq_index(
         codes_udf = _pq_codes_udf(codebook, meta["m"], meta["sub"])
         cell_udf = _ivf_cell_udf(centroids, normalize=True)
 
-    existing = spark.read.parquet(path.rstrip("/") + "/coded").select("id")
-    fresh = (
+    # within-batch dedup (append_new_ids): a replayed row concatenated
+    # into the same batch would otherwise pass the anti join twice and
+    # the duplicate coded rows would occupy multiple top-k slots at
+    # query time (conflicting vectors per id are an upstream integrity
+    # error — dq_integrity_report's territory)
+    return append_new_ids(
+        spark,
+        part(path, CODED),
         new_vectors.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("vector")
-        )
-        .where(F.col("id").isNotNull())
-        # within-batch dedup: a replayed row concatenated into the same
-        # batch would otherwise pass the anti join twice and the
-        # duplicate coded rows would occupy multiple top-k slots at
-        # query time (conflicting vectors per id are an upstream
-        # integrity error — dq_integrity_report's territory)
-        .dropDuplicates(["id"])
-        .join(existing, "id", "left_anti")
-    )
-    coded = spread_small_input(fresh).select(
-        "id",
-        "vector",
-        F.coalesce(cell_udf(F.col("vector")), F.lit(-1)).alias("cell"),
-        codes_udf(F.col("vector")).alias("codes"),
-    ).localCheckpoint(eager=True)  # lineage reads the path being appended
-    n = coded.count()
-    if n:
+        ),
+        encode=lambda fresh: spread_small_input(fresh).select(
+            "id",
+            "vector",
+            F.coalesce(cell_udf(F.col("vector")), F.lit(-1)).alias("cell"),
+            codes_udf(F.col("vector")).alias("codes"),
+        ),
         # one file per cell per append (see build_ivfpq_index)
-        (
-            coded.repartition(meta["num_centroids"], "cell")
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(path.rstrip("/") + "/coded")
-        )
-    return n
+        partition_by=["cell"],
+    )
 
 
 def query_ivfpq_index(
@@ -238,7 +218,7 @@ def query_ivfpq_index(
     exact re-rank re-reads just (id, vector) of the probed cells for
     the shortlist join. Same output contract as
     :func:`..similarity.cosine_topk_ivfpq`."""
-    meta = load_index_meta(spark, path)
+    meta = read_meta(spark, path)
     m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
     md5_mode = meta.get("quant_mode", "float") == "md5"
 
@@ -288,7 +268,7 @@ def query_ivfpq_index(
     )
     cells_needed = sorted({int(c) for row in probe_cells for c in row})
 
-    coded = spark.read.parquet(path.rstrip("/") + "/coded").where(
+    coded = spark.read.parquet(part(path, CODED)).where(
         F.col("cell").isin(cells_needed)  # static partition pruning
     )
     terms = [
@@ -376,7 +356,7 @@ def query_ivfpq_index_distributed(
     driver-computed cell predicate prunes the scan to files."""
     from .similarity import _ivf_probe_int_udf, _ivf_probe_udf, _pq_lut_udf
 
-    meta = load_index_meta(spark, path)
+    meta = read_meta(spark, path)
     m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
     if meta.get("quant_mode", "float") == "md5":
         C = np.asarray(meta["codebook"], dtype=np.int64)
@@ -398,7 +378,7 @@ def query_ivfpq_index_distributed(
         F.explode(probe_udf(F.col(vec_col))).alias("cell"),
     )
 
-    coded = spark.read.parquet(path.rstrip("/") + "/coded")
+    coded = spark.read.parquet(part(path, CODED))
     terms = [
         F.element_at(
             F.col("lut"),
@@ -468,56 +448,13 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> int:
     files, so every append adds one file per touched cell; after N
     ingest batches a "pruned" query still LISTS AND OPENS N files per
     probed cell and the file-listing overhead dominates the scan.
-    Compaction reads the coded table once, repartitions on cell (each
-    cell's rows land in exactly one task → exactly one file per cell),
-    and atomically swaps via a temp path with the same crash contract
-    as :func:`..sinks.parquet.compact_dataset`: a crash between the
-    two renames is healed at the next call by restoring the backup.
-    Query results are bit-identical before/after (pinned in
+    Compaction is :func:`..sinks.parquet.compact_dataset` partitioned
+    by cell: each cell's rows land in exactly one task, so exactly one
+    file per cell, swapped in atomically and crash-healed at the next
+    call. Query results are bit-identical before/after (pinned in
     tests/test_ann_index.py). Returns the new data-file count.
     """
-    from ..sinks.fsutil import checked_rename, hadoop_fs, remove_stale
-
-    meta = load_index_meta(spark, path)
-    coded_path = path.rstrip("/") + "/coded"
-    fs, hpath = hadoop_fs(spark, coded_path)
-    src = hpath(coded_path)
-    tmp = coded_path + "._compacting"
-    tmp_p = hpath(tmp)
-    backup = hpath(coded_path + "._precompact")
-    # crash recovery first: a prior compaction that died between its
-    # renames left src missing and ._precompact holding the only copy
-    if (not fs.exists(src)) and fs.exists(backup):
-        checked_rename(fs, backup, src)
-    remove_stale(fs, tmp_p, backup)
-    from ..sinks.versions import _data_files, _versions_dir, record_rewrite
-
-    old_files = (
-        _data_files(fs, hpath, coded_path)
-        if fs.exists(hpath(_versions_dir(coded_path)))
-        else []
-    )
-
-    (
-        spark.read.parquet(coded_path)
-        .repartition(meta["num_centroids"], "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    checked_rename(fs, src, backup)
-    checked_rename(fs, tmp_p, src)
-    fs.delete(backup, True)
-    # versioning stamp after the swap is durable (no-op unless the
-    # coded table has committed versions)
-    record_rewrite(spark, coded_path, "compact", old_files)
-
-    out_files = 0
-    it = fs.listFiles(src, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            out_files += 1
-    return out_files
+    return compact_dataset(spark, part(path, CODED), partition_by=["cell"])
 
 
 def index_health(
@@ -548,11 +485,11 @@ def index_health(
     """
     from ..sinks.fsutil import hadoop_fs
 
-    meta = load_index_meta(spark, path)
+    meta = read_meta(spark, path)
     m, sub, K = meta["m"], meta["sub"], meta["codebook_size"]
     G = np.asarray(meta["centroids"])
     C = np.asarray(meta["codebook"])
-    coded_path = path.rstrip("/") + "/coded"
+    coded_path = part(path, CODED)
     coded = spark.read.parquet(coded_path)
 
     balance = (

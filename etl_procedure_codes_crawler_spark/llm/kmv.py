@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .overlap import _group_shingles
+from .store import part, read_meta, write_meta
 
 #: hash space size: 16^15 = 2^60 (15 md5 hex chars). Exactly
 #: representable as a double (one significant bit), so (k-1)*H_SPACE
@@ -112,7 +113,13 @@ def kmv_distinct_by_group(
 ) -> DataFrame:
     """(group, n_in_sketch, est_distinct) — estimated distinct-shingle
     cardinality per group from a k-value sketch."""
-    minima = group_kmv_minima(df, group_col, text_col, k, shingle_k)
+    return _group_estimates(
+        group_kmv_minima(df, group_col, text_col, k, shingle_k), k
+    )
+
+
+def _group_estimates(minima: DataFrame, k: int) -> DataFrame:
+    """(group, n_in_sketch, est_distinct) from per-group minima."""
     return (
         minima.groupBy("grp")
         .agg(
@@ -152,23 +159,15 @@ def kmv_distinct_by_group(
 # - compaction == no-op semantically: rewriting all segments as the
 #   merged bottom-k changes no estimate, only file counts.
 
-import json as _json
-
-
-def _kmv_meta_path(path: str) -> str:
-    return path.rstrip("/") + "/meta"
+#: meta versions the store reads
+_KMV_VERSIONS = (1,)
 
 
 def _kmv_minima_path(path: str) -> str:
-    return path.rstrip("/") + "/minima"
+    return part(path, "minima")
 
 
-def _kmv_schema():
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    return StructType(
-        [StructField("grp", StringType()), StructField("h", LongType())]
-    )
+_KMV_SCHEMA = "grp string, h bigint"
 
 
 def create_kmv_store(
@@ -177,36 +176,41 @@ def create_kmv_store(
     """Initialize an empty store; k and shingle_k ride in meta so a
     batch sketched with different parameters cannot silently merge
     (bottom-64 of bottom-32 segments would under-estimate)."""
-    meta = {"k": int(k), "shingle_k": int(shingle_k), "version": 1}
-    spark.createDataFrame([(_json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(_kmv_meta_path(path))
-    return meta
-
-
-def load_kmv_meta(spark: SparkSession, path: str) -> dict:
-    return _json.loads(
-        spark.read.parquet(_kmv_meta_path(path)).first()["meta"]
+    return write_meta(
+        spark, path, {"k": int(k), "shingle_k": int(shingle_k), "version": 1}
     )
 
 
-def read_kmv_store(
-    spark: SparkSession, path: str, meta: dict | None = None
-) -> DataFrame:
+def read_kmv_store(spark: SparkSession, path: str) -> DataFrame:
     """Merged per-group bottom-k over every persisted segment —
-    the exact merge (distinct, then k smallest per group). ``meta``:
-    pass the store's (immutable) meta to skip the per-call read —
-    one whole job per call otherwise (round 13, guide §1.2)."""
+    the exact merge (distinct, then k smallest per group)."""
     from ..sources.parquet import read_table_or_empty
 
-    if meta is None:
-        meta = load_kmv_meta(spark, path)
-    rows = read_table_or_empty(spark, _kmv_minima_path(path), _kmv_schema())
+    k = int(read_meta(spark, path, _KMV_VERSIONS)["k"])
+    rows = read_table_or_empty(spark, _kmv_minima_path(path), _KMV_SCHEMA)
     w = Window.partitionBy("grp").orderBy("h")
     return (
         rows.distinct()
         .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= int(meta["k"]))
+        .filter(F.col("rk") <= k)
+    )
+
+
+def _overwrite_minima(spark: SparkSession, path: str, minima) -> None:
+    """Replace every segment with ``minima`` (grp, h). Collected
+    driver-side first (≤ k rows per group), so the overwrite never
+    reads its own input."""
+    rows = minima.select("grp", "h").collect()
+    spark.createDataFrame(rows, _KMV_SCHEMA).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(_kmv_minima_path(path))
+
+
+def _sketch(spark, path, docs, group_col, text_col) -> DataFrame:
+    """``docs`` sketched with the store's parameters."""
+    meta = read_meta(spark, path, _KMV_VERSIONS)
+    return group_kmv_minima(
+        docs, group_col, text_col, int(meta["k"]), int(meta["shingle_k"])
     )
 
 
@@ -216,36 +220,19 @@ def append_to_kmv_store(
     docs: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    meta: dict | None = None,
 ) -> None:
     """Sketch the batch with the store's parameters and append its
     per-group minima as a new segment. Idempotent under replay by
-    construction (see module notes) — no batch keys, no anti-join.
-    ``meta``: pass the store's (immutable) meta dict to skip the
-    per-call meta read — a whole job per micro-batch on streaming
-    paths that append every trigger."""
-    if meta is None:
-        meta = load_kmv_meta(spark, path)
-    minima = group_kmv_minima(
-        docs, group_col, text_col, int(meta["k"]), int(meta["shingle_k"])
-    )
-    minima.select("grp", "h").write.mode("append").parquet(
-        _kmv_minima_path(path)
-    )
+    construction (see module notes) — no batch keys, no anti-join."""
+    _sketch(spark, path, docs, group_col, text_col).select(
+        "grp", "h"
+    ).write.mode("append").parquet(_kmv_minima_path(path))
 
 
-def compact_kmv_store(
-    spark: SparkSession, path: str, meta: dict | None = None
-) -> None:
+def compact_kmv_store(spark: SparkSession, path: str) -> None:
     """Rewrite all segments as the merged bottom-k (one small file) —
-    semantically a no-op, physically a file-count reset. The merged
-    relation is materialized driver-side first (it is ≤ k rows per
-    group) so the overwrite never reads its own input."""
-    merged = read_kmv_store(spark, path, meta=meta).select("grp", "h")
-    rows = merged.collect()
-    spark.createDataFrame(rows, _kmv_schema()).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_kmv_minima_path(path))
+    semantically a no-op, physically a file-count reset."""
+    _overwrite_minima(spark, path, read_kmv_store(spark, path))
 
 
 def rebuild_kmv_store(
@@ -262,39 +249,16 @@ def rebuild_kmv_store(
     deletion consistency for this artifact is re-derivation from the
     post-deletion warehouse, same as the Bloom store's heal. One
     sketch pass; the store's parameters are preserved from meta."""
-    meta = load_kmv_meta(spark, path)
-    minima = group_kmv_minima(
-        docs, group_col, text_col, int(meta["k"]), int(meta["shingle_k"])
+    _overwrite_minima(
+        spark, path, _sketch(spark, path, docs, group_col, text_col)
     )
-    rows = minima.select("grp", "h").collect()
-    spark.createDataFrame(rows, _kmv_schema()).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_kmv_minima_path(path))
 
 
-def kmv_store_estimates(
-    spark: SparkSession, path: str, meta: dict | None = None
-) -> DataFrame:
+def kmv_store_estimates(spark: SparkSession, path: str) -> DataFrame:
     """(group, n_in_sketch, est_distinct) served off the persisted
     minima — no corpus rescan, ever."""
-    if meta is None:
-        meta = load_kmv_meta(spark, path)
-    k = int(meta["k"])
-    return (
-        read_kmv_store(spark, path, meta=meta)
-        .groupBy("grp")
-        .agg(
-            F.max("h").alias("_hk"),
-            F.count(F.lit(1)).cast("bigint").alias("n_in_sketch"),
-        )
-        .select(
-            F.col("grp").alias("group"),
-            "n_in_sketch",
-            F.round(_estimate("_hk", "n_in_sketch", k), 4).alias(
-                "est_distinct"
-            ),
-        )
-    )
+    k = int(read_meta(spark, path, _KMV_VERSIONS)["k"])
+    return _group_estimates(read_kmv_store(spark, path), k)
 
 
 def kmv_overlap_pairs(

@@ -31,7 +31,8 @@ degenerates when its members are near-identical, so the ranked
 survivors are representative of the members dropped.
 
 Store layout (plain parquet):
-    <path>/meta/        one JSON row: k, bands, rows_per_band, version
+    <path>/meta.json    k, bands, rows_per_band, version, hash_fn
+                        (:mod:`.store` meta)
     <path>/signatures/  v2: (id, sig array<bigint>,
                              buckets array<struct<band int, bucket bigint>>)
                         v1: (id, sig) — still queryable; buckets are
@@ -43,13 +44,16 @@ cannot silently produce an empty join.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .dedup import minhash_signatures
+from ..sinks.parquet import compact_dataset
+from .dedup import band_key, minhash_signatures
+from .store import append_new_ids, part, read_meta, write_meta
+
+#: the signature part, ``<path>/signatures``
+SIGNATURES = "signatures"
 
 #: store rows kept per (band, bucket) in the candidate join — high
 #: enough that non-degenerate LSH buckets (a handful of members) are
@@ -79,27 +83,18 @@ def _band_buckets(
     sig_col, bands: int, rows_per_band: int, hash_fn: str = "xx"
 ):
     """(band, bucket) structs derived map-side from a signature array —
-    the same bucket construction as :func:`.dedup.minhash_buckets`
-    (xxhash64 of the band rows, or in ``md5`` mode the md5-60 of the
-    colon-joined slot values — engine-deterministic, round 11), so
-    buckets agree across batches AND with the SQL oracle."""
-
-    def bucket_of(band: int):
-        slots = [
-            F.element_at(sig_col, band * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
-        if hash_fn == "md5":
-            return F.conv(
-                F.substring(F.md5(F.concat_ws(":", *slots)), 1, 15), 16, 10
-            ).cast("long")
-        return F.xxhash64(*slots)
-
+    the bucket key of :func:`.dedup.minhash_buckets`
+    (:func:`.dedup.band_key`), so buckets agree across batches AND
+    with the SQL oracle."""
     return F.array(
         *[
             F.struct(
                 F.lit(band).alias("band"),
-                bucket_of(band).alias("bucket"),
+                band_key(
+                    [F.element_at(sig_col, band * rows_per_band + r + 1)
+                     for r in range(rows_per_band)],
+                    hash_fn,
+                ).alias("bucket"),
             )
             for band in range(bands)
         ]
@@ -141,23 +136,18 @@ def build_minhash_store(
     probe derives the SAME family ('md5' makes the whole store
     lifecycle engine-deterministic and hash-oracle-able; 'xx' stays
     the throughput default)."""
-    spark = docs.sparkSession
     _signed_with_buckets(
         docs, text_col, id_col, k, bands, rows_per_band, hash_fn
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/signatures")
-    meta = {"k": k, "bands": bands, "rows_per_band": rows_per_band,
-            "version": 2, "hash_fn": hash_fn}
-    spark.createDataFrame(
-        [(json.dumps(meta),)], "meta string"
-    ).repartition(1).write.mode("overwrite").parquet(
-        path.rstrip("/") + "/meta"
-    )
+    ).write.mode("overwrite").parquet(part(path, SIGNATURES))
+    write_meta(docs.sparkSession, path, {
+        "k": k, "bands": bands, "rows_per_band": rows_per_band,
+        "version": 2, "hash_fn": hash_fn,
+    })
 
 
 def load_store_meta(spark: SparkSession, path: str) -> dict:
-    return json.loads(
-        spark.read.parquet(path.rstrip("/") + "/meta").first()["meta"]
-    )
+    """Store meta; v1 (no buckets column) and v2 layouts both read."""
+    return read_meta(spark, path, (1, 2))
 
 
 def append_to_minhash_store(
@@ -175,29 +165,22 @@ def append_to_minhash_store(
     meta = load_store_meta(spark, path)
     bands, rpb = meta["bands"], meta["rows_per_band"]
     hash_fn = meta.get("hash_fn", "xx")
-    existing = spark.read.parquet(path.rstrip("/") + "/signatures").select("id")
-    fresh = (
-        new_docs.where(F.col(id_col).isNotNull())
-        # one row per id BEFORE signing: minhash groups shingles by id,
-        # so two different texts sharing an id would otherwise merge
-        # into one garbage signature (the min over the UNION of both
-        # shingle sets) that matches neither document
-        .dropDuplicates([id_col])
-        .join(existing.withColumnRenamed("id", id_col), id_col, "left_anti")
-    )
-    if meta.get("version", 1) >= 2:
-        signed = _signed_with_buckets(
-            fresh, text_col, id_col, meta["k"], bands, rpb, hash_fn
-        )
-    else:
-        signed = _sig_array(
+
+    def sign(fresh: DataFrame) -> DataFrame:
+        if meta.get("version", 1) >= 2:
+            return _signed_with_buckets(
+                fresh, text_col, id_col, meta["k"], bands, rpb, hash_fn
+            )
+        return _sig_array(
             fresh, text_col, id_col, meta["k"], bands * rpb, hash_fn
         )
-    signed = signed.localCheckpoint(eager=True)  # lineage reads the path being appended
-    n = signed.count()
-    if n:
-        signed.write.mode("append").parquet(path.rstrip("/") + "/signatures")
-    return n
+
+    # one row per id BEFORE signing (append_new_ids): minhash groups
+    # shingles by id, so two different texts sharing an id would
+    # otherwise merge into one garbage signature
+    return append_new_ids(
+        spark, part(path, SIGNATURES), new_docs, id_col, encode=sign
+    )
 
 
 def _store_bucket_rows(
@@ -218,6 +201,35 @@ def _store_bucket_rows(
         F.col("sig").alias("snap_sig"),
         bb,
     ).select("snapshot_id", "snap_sig", "bb.band", "bb.bucket")
+
+
+def _capped_store_rows(
+    spark: SparkSession, path: str, meta: dict, cap: int
+) -> DataFrame:
+    """:func:`_store_bucket_rows` of the store, keeping only the
+    ``cap`` lowest-id rows per (band, bucket)."""
+    w_cap = Window.partitionBy("band", "bucket").orderBy("snapshot_id")
+    return (
+        _store_bucket_rows(
+            spark.read.parquet(part(path, SIGNATURES)), meta["bands"],
+            meta["rows_per_band"], meta.get("hash_fn", "xx"),
+        )
+        .withColumn("_bkrank", F.row_number().over(w_cap))
+        .filter(F.col("_bkrank") <= cap)
+        .drop("_bkrank")
+    )
+
+
+def _est_jaccard(sig_a: str, sig_b: str, num_hashes: int):
+    """Fraction of agreeing minhash slots of two signature columns."""
+    agree = F.aggregate(
+        F.zip_with(
+            F.col(sig_a), F.col(sig_b), lambda a, b: (a == b).cast("int")
+        ),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return agree.cast("double") / F.lit(num_hashes)
 
 
 def near_dups_against_store(
@@ -254,37 +266,21 @@ def near_dups_against_store(
     new_sig = _sig_array(
         new_docs, text_col, id_col, meta["k"], num_hashes, hash_fn
     )
-    snap = spark.read.parquet(path.rstrip("/") + "/signatures")
-
     nb = new_sig.select(
         F.col("id").alias("new_id"),
         F.col("sig").alias("new_sig"),
         F.explode(_band_buckets(F.col("sig"), bands, rpb, hash_fn)).alias("bb"),
     ).select("new_id", "new_sig", "bb.band", "bb.bucket")
-    w_cap = Window.partitionBy("band", "bucket").orderBy("snapshot_id")
-    sb = (
-        _store_bucket_rows(snap, bands, rpb, hash_fn)
-        .withColumn("_bkrank", F.row_number().over(w_cap))
-        .filter(F.col("_bkrank") <= max_store_bucket_size)
-        .drop("_bkrank")
-    )
-
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("new_sig"),
-            F.col("snap_sig"),
-            lambda a, b: (a == b).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    sb = _capped_store_rows(spark, path, meta, max_store_bucket_size)
     return (
         nb.join(sb, ["band", "bucket"])
         .filter(F.col("new_id") != F.col("snapshot_id"))
         .select(
             "new_id",
             "snapshot_id",
-            (agree.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
+            _est_jaccard("new_sig", "snap_sig", num_hashes).alias(
+                "est_jaccard"
+            ),
         )
         # a pair colliding in several bands dedups to one row; the
         # estimate is identical per pair so max() is exact
@@ -305,7 +301,7 @@ def store_bucket_stats(
     ``max_store_bucket_size`` — one cheap groupBy over the persisted
     bucket assignments, no signatures or text read."""
     meta = load_store_meta(spark, path)
-    snap = spark.read.parquet(path.rstrip("/") + "/signatures")
+    snap = spark.read.parquet(part(path, SIGNATURES))
     rows = _store_bucket_rows(snap, meta["bands"], meta["rows_per_band"])
     return (
         rows.groupBy("band", "bucket")
@@ -336,11 +332,7 @@ def compact_minhash_store(
     on the next call); query results are unaffected — signatures are a
     set, the layout carries no ordering contract. Returns the new file
     count."""
-    from ..sinks.parquet import compact_dataset
-
-    return compact_dataset(
-        spark, path.rstrip("/") + "/signatures", target_file_mb
-    )
+    return compact_dataset(spark, part(path, SIGNATURES), target_file_mb)
 
 
 # ---------------------------------------------------------------------------
@@ -358,9 +350,10 @@ def compact_minhash_store(
 #     <path>/clusters/  materialized (id, cluster_id) labels,
 #                       cluster_id = min reachable id (the
 #                       cluster.duplicate_clusters convention)
-#     <path>/cluster_meta/  one JSON row {"n_edges": N} — the
-#                       staleness token: labels are valid iff the edge
-#                       log holds exactly N rows
+#     <path>/cluster_meta.json  {"n_edges": N} — the staleness
+#                       token: labels are valid iff the edge log holds
+#                       exactly N rows; an absent token reads as
+#                       n_edges=0
 #
 # Update = QUOTIENT absorb: map each new edge's endpoints to their
 # current labels (or themselves), run connected components over the
@@ -372,38 +365,27 @@ def compact_minhash_store(
 # absorbed labels are IDENTICAL to a from-scratch recompute (pinned in
 # tests/test_neardup_store.py).
 #
-# Crash contract (write order: edges -> clusters -> cluster_meta): any
-# crash leaves n_edges(meta) != count(edges/), which the next update
-# detects and heals by recomputing labels from the FULL edge log —
-# still only the edge relation, never the corpus.
+# Crash contract (write order: edges -> clusters -> cluster_meta.json):
+# any crash leaves n_edges(token) != count(edges/) — a crash inside the
+# token's replace leaves it absent, i.e. n_edges=0, which a non-empty
+# edge log also contradicts — so the next update detects it and heals
+# by recomputing labels from the FULL edge log (still only the edge
+# relation, never the corpus).
+
+
+_CLUSTER_META = "cluster_meta.json"
 
 
 def _edges_path(path: str) -> str:
-    return path.rstrip("/") + "/edges"
+    return part(path, "edges")
 
 
 def _clusters_path(path: str) -> str:
-    return path.rstrip("/") + "/clusters"
+    return part(path, "clusters")
 
 
-def _cluster_meta_path(path: str) -> str:
-    return path.rstrip("/") + "/cluster_meta"
-
-
-def _edges_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
-    )
-
-
-def _labels_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [StructField("id", LongType()), StructField("cluster_id", LongType())]
-    )
+_EDGES_SCHEMA = "doc_a bigint, doc_b bigint"
+_LABELS_SCHEMA = "id bigint, cluster_id bigint"
 
 
 def read_cluster_labels(spark: SparkSession, path: str) -> DataFrame:
@@ -412,28 +394,14 @@ def read_cluster_labels(spark: SparkSession, path: str) -> DataFrame:
     :func:`store_cluster_labels` materializes that view."""
     from ..sources.parquet import read_table_or_empty
 
-    return read_table_or_empty(spark, _clusters_path(path), _labels_schema())
-
-
-def _cluster_meta(spark: SparkSession, path: str) -> dict:
-    from ..sources.parquet import read_table_or_empty
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    rows = read_table_or_empty(
-        spark,
-        _cluster_meta_path(path),
-        StructType([StructField("meta", StringType())]),
-    ).collect()
-    return json.loads(rows[0]["meta"]) if rows else {"n_edges": 0}
+    return read_table_or_empty(spark, _clusters_path(path), _LABELS_SCHEMA)
 
 
 def _write_labels(spark, path: str, labels: DataFrame, n_edges: int) -> None:
     # labels BEFORE meta: a crash in between leaves the token stale and
     # the next update heals; meta-first would bless wrong labels
     labels.write.mode("overwrite").parquet(_clusters_path(path))
-    spark.createDataFrame(
-        [(json.dumps({"n_edges": int(n_edges)}),)], "meta string"
-    ).repartition(1).write.mode("overwrite").parquet(_cluster_meta_path(path))
+    write_meta(spark, path, {"n_edges": int(n_edges)}, _CLUSTER_META)
 
 
 def recompute_cluster_labels(spark: SparkSession, path: str) -> DataFrame:
@@ -443,7 +411,7 @@ def recompute_cluster_labels(spark: SparkSession, path: str) -> DataFrame:
     from ..sources.parquet import read_table_or_empty
     from .cluster import connected_components
 
-    edges = read_table_or_empty(spark, _edges_path(path), _edges_schema())
+    edges = read_table_or_empty(spark, _edges_path(path), _EDGES_SCHEMA)
     n_edges = edges.count()
     comp = connected_components(edges.dropDuplicates(["doc_a", "doc_b"]))
     labels = comp.select(
@@ -479,10 +447,10 @@ def update_cluster_labels(
     )
     n_new = e.count()
     existing_edges = read_table_or_empty(
-        spark, _edges_path(path), _edges_schema()
+        spark, _edges_path(path), _EDGES_SCHEMA
     )
     n_before = existing_edges.count()
-    meta = _cluster_meta(spark, path)
+    meta = read_meta(spark, path, name=_CLUSTER_META, default={"n_edges": 0})
     if n_new:
         e.write.mode("append").parquet(_edges_path(path))
     if meta["n_edges"] != n_before:
@@ -552,7 +520,7 @@ def store_cluster_labels(
     ids = (
         all_ids.select(F.col(all_ids.columns[0]).cast("bigint").alias("id"))
         if all_ids is not None
-        else spark.read.parquet(path.rstrip("/") + "/signatures").select("id")
+        else spark.read.parquet(part(path, SIGNATURES)).select("id")
     ).dropDuplicates(["id"])
     labels = read_cluster_labels(spark, path)
     return ids.join(labels, "id", "left").select(
@@ -576,17 +544,7 @@ def near_dup_pairs_within_store(
     |bucket|². Feeds :func:`update_cluster_labels` /
     ``cluster.duplicate_clusters`` directly."""
     meta = load_store_meta(spark, path)
-    bands, rpb = meta["bands"], meta["rows_per_band"]
-    hash_fn = meta.get("hash_fn", "xx")
-    num_hashes = bands * rpb
-    snap = spark.read.parquet(path.rstrip("/") + "/signatures")
-    w_cap = Window.partitionBy("band", "bucket").orderBy("snapshot_id")
-    rows = (
-        _store_bucket_rows(snap, bands, rpb, hash_fn)
-        .withColumn("_bkrank", F.row_number().over(w_cap))
-        .filter(F.col("_bkrank") <= max_store_bucket_size)
-        .drop("_bkrank")
-    )
+    rows = _capped_store_rows(spark, path, meta, max_store_bucket_size)
     a = rows.select(
         F.col("snapshot_id").alias("doc_a"),
         F.col("snap_sig").alias("_sig_a"),
@@ -599,20 +557,14 @@ def near_dup_pairs_within_store(
         "band",
         "bucket",
     )
-    agree = F.aggregate(
-        F.zip_with(
-            F.col("_sig_a"), F.col("_sig_b"), lambda x, y: (x == y).cast("int")
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    num_hashes = meta["bands"] * meta["rows_per_band"]
     return (
         a.join(b, ["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select(
             "doc_a",
             "doc_b",
-            (agree.cast("double") / F.lit(num_hashes)).alias("est_jaccard"),
+            _est_jaccard("_sig_a", "_sig_b", num_hashes).alias("est_jaccard"),
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.max("est_jaccard").alias("est_jaccard"))

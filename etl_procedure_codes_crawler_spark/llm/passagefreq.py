@@ -7,7 +7,7 @@ WHOLE crawl, then strip frequent passages from every document; a
 growing corpus cannot re-aggregate history per batch. This store
 persists mergeable per-batch count segments:
 
-    <path>/meta/      one JSON row: block, version
+    <path>/meta.json  block, version (:mod:`.store` meta)
     <path>/segments/  (batch_id, fp, df) — per-segment DISTINCT-
                       document counts KEYED BY BATCH; the read path
                       drops duplicate (batch_id, fp) rows BEFORE
@@ -31,41 +31,28 @@ an optimization, not a correctness need.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _rebuild_cleaned, passage_rows
-
-
-def _meta_path(path: str) -> str:
-    return path.rstrip("/") + "/meta"
+from .store import StoreVersionError, part, read_meta, write_meta
 
 
 def _segments_path(path: str) -> str:
-    return path.rstrip("/") + "/segments"
+    return part(path, "segments")
 
 
-def _segments_schema():
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("batch_id", StringType()),
-            StructField("fp", StringType()),
-            StructField("df", LongType()),
-        ]
-    )
+_SEGMENTS_SCHEMA = "batch_id string, fp string, df bigint"
 
 
-class PassageFreqStoreVersionError(RuntimeError):
+class PassageFreqStoreVersionError(StoreVersionError):
     """Persisted store predates batch-keyed (replay-safe) segments."""
+
+    kind = "passage-frequency"
+    detail = (
+        "version-2 segments are batch-keyed for replay idempotency. "
+        "Rebuild: create_passage_freq_store + one append per batch."
+    )
 
 
 def create_passage_freq_store(
@@ -74,11 +61,7 @@ def create_passage_freq_store(
     """Initialize an empty store; ``block`` rides in meta so a batch
     chunked at a different granularity cannot silently contribute
     incomparable counts."""
-    meta = {"block": int(block), "version": 2}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(_meta_path(path))
-    return meta
+    return write_meta(spark, path, {"block": int(block), "version": 2})
 
 
 def load_passage_freq_meta(spark: SparkSession, path: str) -> dict:
@@ -87,17 +70,7 @@ def load_passage_freq_meta(spark: SparkSession, path: str) -> dict:
     replayed append from a legitimate one — exactly the silent
     frequency inflation version 2 exists to prevent. Rebuild by
     re-offering the corpus once into a fresh store."""
-    meta = json.loads(
-        spark.read.parquet(_meta_path(path)).first()["meta"]
-    )
-    version = meta.get("version", 1)
-    if version != 2:
-        raise PassageFreqStoreVersionError(
-            f"passage-frequency store at {path!r} is version {version}; "
-            "version-2 segments are batch-keyed for replay idempotency. "
-            "Rebuild: create_passage_freq_store + one append per batch."
-        )
-    return meta
+    return read_meta(spark, path, (2,), PassageFreqStoreVersionError)
 
 
 def _derived_batch_id(docs: DataFrame, id_col: str) -> str:
@@ -150,9 +123,6 @@ def append_passage_counts(
     if batch_id is None:
         batch_id = _derived_batch_id(docs, id_col)
     if chunks is None:
-        # meta is only needed to derive the rows — a caller passing
-        # precomputed chunks owns the block-size agreement, and the
-        # meta read is one whole job per batch on the streaming path
         meta = load_passage_freq_meta(spark, path)
         chunks = passage_rows(docs, meta["block"], text_col, id_col)
     # written straight from its plan, unpinned: ``docs``/``chunks``
@@ -175,7 +145,7 @@ def read_passage_freqs(spark: SparkSession, path: str) -> DataFrame:
     from ..sources.parquet import read_table_or_empty
 
     return (
-        read_table_or_empty(spark, _segments_path(path), _segments_schema())
+        read_table_or_empty(spark, _segments_path(path), _SEGMENTS_SCHEMA)
         .dropDuplicates(["batch_id", "fp"])
         .groupBy("fp")
         .agg(F.sum("df").cast("bigint").alias("df"))

@@ -18,58 +18,39 @@ exact for hamming <= 3 by pigeonhole
 are never read at probe time.
 
 Store layout (plain parquet):
-    <path>/meta/    one JSON row: method, version
-    <path>/hashes/  (id, phash) — append-only; replay re-appends are
-                    removed by the id anti-join in append
+    <path>/meta.json  method, version (:mod:`.store` meta)
+    <path>/hashes/    (id, phash) — append-only; replay re-appends are
+                      removed by the id anti-join in append
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _meta_path(path: str) -> str:
-    return path.rstrip("/") + "/meta"
+from .store import append_new_ids, part, write_meta
 
 
 def _hashes_path(path: str) -> str:
-    return path.rstrip("/") + "/hashes"
+    return part(path, "hashes")
 
 
-def _hashes_schema():
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    return StructType(
-        [StructField("id", LongType()), StructField("phash", LongType())]
-    )
+_HASHES_SCHEMA = "id bigint, phash bigint"
 
 
 def create_phash_store(
     spark: SparkSession, path: str, method: str = "dhash"
 ) -> dict:
-    """Initialize an empty store; ``method`` rides in meta so batches
-    hashed with a different algorithm cannot silently produce an
-    empty-looking probe."""
-    meta = {"method": method, "version": 1}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(_meta_path(path))
-    return meta
-
-
-def load_phash_meta(spark: SparkSession, path: str) -> dict:
-    return json.loads(
-        spark.read.parquet(_meta_path(path)).first()["meta"]
-    )
+    """Initialize an empty store. ``method`` is recorded in meta for
+    operators; nothing reads it back, so hashing new objects with the
+    same method as the stored ones is the caller's responsibility."""
+    return write_meta(spark, path, {"method": method, "version": 1})
 
 
 def read_phash_store(spark: SparkSession, path: str) -> DataFrame:
     from ..sources.parquet import read_table_or_empty
 
-    return read_table_or_empty(spark, _hashes_path(path), _hashes_schema())
+    return read_table_or_empty(spark, _hashes_path(path), _HASHES_SCHEMA)
 
 
 def append_to_phash_store(
@@ -82,29 +63,15 @@ def append_to_phash_store(
     """Append hashes for ids not already stored (anti-join on id —
     replay-idempotent). NULL hashes (decode errors) are skipped: an
     undecodable payload has no perceptual identity to store."""
-    fresh = (
+    return append_new_ids(
+        spark,
+        _hashes_path(path),
         hashes.select(
             F.col(id_col).cast("bigint").alias("id"),
             F.col(phash_col).cast("bigint").alias("phash"),
-        )
-        .where(F.col("id").isNotNull() & F.col("phash").isNotNull())
-        .dropDuplicates(["id"])
+        ).where(F.col("phash").isNotNull()),
+        schema=_HASHES_SCHEMA,
     )
-    # empty-store fast path (the first accepted batch / a fresh gate):
-    # nothing to anti-join against — same one-stat shortcut as
-    # near_dups_against_phash_store
-    from ..sinks.fsutil import hadoop_fs
-
-    fs, hpath = hadoop_fs(spark, path)
-    if fs.exists(hpath(_hashes_path(path))):
-        fresh = fresh.join(
-            read_phash_store(spark, path).select("id"), "id", "left_anti"
-        )
-    fresh = fresh.localCheckpoint(eager=True)  # lineage reads the append
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(_hashes_path(path))
-    return n
 
 
 def near_dups_against_phash_store(

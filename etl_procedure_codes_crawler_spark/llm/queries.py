@@ -6818,10 +6818,10 @@ def forget_documents_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(wh)
             .join(doomed, "doc_id", "left_semi")
             .count()
-            + spark.read.parquet(f"{nd}/signatures")
+            + spark.read.parquet(f"{nd}/{NS.SIGNATURES}")
             .join(doomed.withColumnRenamed("doc_id", "id"), "id", "left_semi")
             .count()
-            + spark.read.parquet(f"{ix}/coded")
+            + spark.read.parquet(f"{ix}/{IX.CODED}")
             .join(doomed.withColumnRenamed("doc_id", "id"), "id", "left_semi")
             .count()
         )
@@ -7271,17 +7271,14 @@ def kmv_store_incremental_estimate(
     documents = load(spark, sf_dir, "documents")
     root = tempfile.mkdtemp(prefix="kmvstore_")
     try:
-        # meta threads through the lifecycle (round 13, guide §1.2):
-        # it is immutable post-create, and a long-lived ingest daemon
-        # caches it the same way — each load is a whole 1-task job
-        meta = KV.create_kmv_store(spark, root, k=64, shingle_k=3)
+        KV.create_kmv_store(spark, root, k=64, shingle_k=3)
         even = documents.filter(F.col("doc_id") % 2 == 0)
         odd = documents.filter(F.col("doc_id") % 2 == 1)
-        KV.append_to_kmv_store(spark, root, even, meta=meta)
-        KV.append_to_kmv_store(spark, root, odd, meta=meta)
-        KV.append_to_kmv_store(spark, root, odd, meta=meta)  # replay
-        KV.compact_kmv_store(spark, root, meta=meta)
-        out = KV.kmv_store_estimates(spark, root, meta=meta)
+        KV.append_to_kmv_store(spark, root, even)
+        KV.append_to_kmv_store(spark, root, odd)
+        KV.append_to_kmv_store(spark, root, odd)  # replay
+        KV.compact_kmv_store(spark, root)
+        out = KV.kmv_store_estimates(spark, root)
         out = out.localCheckpoint()
     finally:
         shutil.rmtree(root, ignore_errors=True)

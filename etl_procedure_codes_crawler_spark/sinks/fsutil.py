@@ -12,9 +12,14 @@ the staging path. These helpers turn that failure mode into an
 exception, and proactively clear stale staging/backup paths a
 crashed earlier run may have left behind (the usual cause of the
 occupied-destination rename failure).
+
+Small JSON documents (version manifests, store meta) are read and
+written here too, driver-side over the same Hadoop FS — no Spark job.
 """
 
 from __future__ import annotations
+
+import json
 
 
 def hadoop_fs(spark, path: str):
@@ -54,3 +59,32 @@ def remove_stale(fs, *paths) -> list[str]:
             fs.delete(p, True)
             removed.append(str(p))
     return removed
+
+
+def write_json(fs, hpath, final_path: str, payload: dict) -> None:
+    """Write ``payload`` as a complete file or not at all: tmp, then
+    delete any existing file, then rename. The delete makes replace
+    work on HDFS-like filesystems, whose rename onto an existing file
+    fails; a crash between delete and rename leaves the file absent,
+    which readers treat as "not written"."""
+    final = hpath(final_path)
+    tmp = hpath(final_path + ".tmp")
+    if fs.exists(tmp):
+        fs.delete(tmp, False)
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(json.dumps(payload).encode("utf-8")))
+    finally:
+        out.close()
+    if fs.exists(final):
+        fs.delete(final, False)
+    checked_rename(fs, tmp, final)
+
+
+def read_json(fs, hpath, path: str) -> dict:
+    raw = fs.open(hpath(path))
+    try:
+        data = bytes(raw.readAllBytes())
+    finally:
+        raw.close()
+    return json.loads(data.decode("utf-8"))

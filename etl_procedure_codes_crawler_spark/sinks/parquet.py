@@ -142,8 +142,10 @@ def compact_dataset(
     millions-of-tiny-files listing/open overhead dominates scan time.
     Compaction reads the dataset, repartitions to the target size from
     the dataset's true byte size, and atomically swaps via a temp path
-    (readers never observe a partial rewrite). Returns the new file
-    count."""
+    (readers never observe a partial rewrite). With ``partition_by``
+    the rows are hash-partitioned on those columns instead, so each
+    partition value lands in one task: one file per partition value.
+    Returns the new file count."""
     fs, hpath = hadoop_fs(spark, path)
     src = hpath(path)
     tmp = path.rstrip("/") + "._compacting"
@@ -167,18 +169,14 @@ def compact_dataset(
         if fs.exists(hpath(_versions_dir(path)))
         else []
     )
-    total_bytes = fs.getContentSummary(src).getLength()
-    n_files = max(1, int(total_bytes // (target_file_mb * 1024 * 1024)) + 1)
-
     df = spark.read.parquet(path)
-    writer = (
-        df.repartition(n_files)
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-    )
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+        writer = df.repartition(*partition_by).write.partitionBy(*partition_by)
+    else:
+        total_bytes = fs.getContentSummary(src).getLength()
+        n_files = int(total_bytes // (target_file_mb * 1024 * 1024)) + 1
+        writer = df.repartition(n_files).write
+    writer.mode("overwrite").option("compression", "snappy").parquet(tmp)
 
     # The dangerous window (src renamed away, replacement not yet in
     # place) mirrors replace_dataset_atomically; a crash here is

@@ -38,12 +38,11 @@ per-file existence round trip.
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .fsutil import checked_rename, hadoop_fs
+from .fsutil import hadoop_fs, read_json, write_json
 
 _MANIFEST_NAME = re.compile(r"^v(\d+)\.json$")
 _REWRITE_NAME = re.compile(r"^rw(\d+)\.json$")
@@ -66,29 +65,6 @@ def _versions_dir(path: str) -> str:
 
 def _rewrites_dir(path: str) -> str:
     return _versions_dir(path) + "/_rewrites"
-
-
-def _atomic_json_write(fs, hpath, final_path: str, payload: dict) -> None:
-    """tmp + rename so the file exists complete or not at all."""
-    final = hpath(final_path)
-    tmp = hpath(final_path + ".tmp")
-    if fs.exists(tmp):
-        fs.delete(tmp, False)
-    out = fs.create(tmp, False)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-    checked_rename(fs, tmp, final)
-
-
-def _read_json(fs, hpath, path: str) -> dict:
-    raw = fs.open(hpath(path))
-    try:
-        data = bytes(raw.readAllBytes())
-    finally:
-        raw.close()
-    return json.loads(data.decode("utf-8"))
 
 
 def record_rewrite(
@@ -115,7 +91,7 @@ def record_rewrite(
         if m:
             seq = max(seq, int(m.group(1)))
     seq += 1
-    _atomic_json_write(
+    write_json(
         fs, hpath, f"{rdir}/rw{seq}.json",
         {
             "seq": seq,
@@ -134,7 +110,7 @@ def _rewrite_records(fs, hpath, path: str) -> list[dict]:
     recs = []
     for st in fs.listStatus(hpath(rdir)):
         if _REWRITE_NAME.match(st.getPath().getName()):
-            recs.append(_read_json(fs, hpath, st.getPath().toString()))
+            recs.append(read_json(fs, hpath, st.getPath().toString()))
     return sorted(recs, key=lambda r: r["seq"])
 
 
@@ -191,7 +167,7 @@ def list_versions(
         rec["_fileset"] = set(rec["files"])
     out = []
     for v in nums:
-        man = _read_json(fs, hpath, f"{_versions_dir(path)}/v{v}.json")
+        man = read_json(fs, hpath, f"{_versions_dir(path)}/v{v}.json")
         missing = [f for f in man["files"] if f not in current]
         out.append(
             {
@@ -236,7 +212,7 @@ def commit_version(spark: SparkSession, path: str, note: str = "") -> int:
     }
     vdir = _versions_dir(path)
     fs.mkdirs(hpath(vdir))
-    _atomic_json_write(fs, hpath, f"{vdir}/v{version}.json", manifest)
+    write_json(fs, hpath, f"{vdir}/v{version}.json", manifest)
     return version
 
 
@@ -276,8 +252,8 @@ def diff_versions(
         )
     fs, hpath = hadoop_fs(spark, path)
     vdir = _versions_dir(path)
-    man_from = _read_json(fs, hpath, f"{vdir}/v{from_version}.json")
-    man_to = _read_json(fs, hpath, f"{vdir}/v{to_version}.json")
+    man_from = read_json(fs, hpath, f"{vdir}/v{from_version}.json")
+    man_to = read_json(fs, hpath, f"{vdir}/v{to_version}.json")
     from_files = set(man_from["files"])
     vanished = [f for f in from_files if f not in set(man_to["files"])]
     if vanished:
@@ -322,7 +298,7 @@ def read_version(
     if version not in versions:
         raise ValueError(f"version {version} not in {versions}")
     fs, hpath = hadoop_fs(spark, path)
-    manifest = _read_json(
+    manifest = read_json(
         fs, hpath, f"{_versions_dir(path)}/v{version}.json"
     )
     # one recursive listing diffed against the manifest — per-file

@@ -24,9 +24,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_table_or_empty(
-    spark: SparkSession, path: str, schema: StructType
+    spark: SparkSession, path: str, schema: StructType | str
 ) -> DataFrame:
-    """Read a parquet dataset; if absent, an empty frame with ``schema``.
+    """Read a parquet dataset; if absent, an empty frame with ``schema``
+    (a StructType or a DDL string).
 
     Replaces the reference's None-on-empty contract
     (``utils/athena.py:47-54``) with the union-identity empty relation

@@ -32,6 +32,49 @@ from ..operators.dedup import anti_join_on_key
 from ..sources.parquet import read_table_or_empty
 
 
+def _unseen_rows(
+    spark: SparkSession,
+    rows: DataFrame,
+    key: str,
+    warehouse_path: str,
+    schema: StructType,
+    bloom_store_path: str | None,
+) -> DataFrame:
+    """``rows`` whose ``key`` the warehouse does not hold. With a bloom
+    store, keys probing definitely-new skip the warehouse, and only
+    the maybe-seen slice pays the exact anti-join."""
+    if bloom_store_path is None:
+        existing = read_table_or_empty(spark, warehouse_path, schema)
+        return anti_join_on_key(rows, existing, key)
+    from ..llm import bloom as B
+
+    meta = B.load_bloom_meta(spark, bloom_store_path)
+    flt = B.read_bloom_store(spark, bloom_store_path)
+    # coverage guard: an EMPTY filter guarding a NON-EMPTY warehouse
+    # means the store was created without seeding (or its segments
+    # were lost) — every probe would answer definitely-new and the
+    # fast path would re-append known keys with no error
+    if flt.isEmpty() and not read_table_or_empty(
+        spark, warehouse_path, schema
+    ).isEmpty():
+        raise ValueError(
+            f"bloom store {bloom_store_path!r} is empty but warehouse "
+            f"{warehouse_path!r} has rows — the definitely-new fast path "
+            "would re-append known keys; recreate the store seeded from "
+            "the warehouse (create_bloom_store(seed_df=...))"
+        )
+    probed = B.probe_bloom(
+        rows, key, flt, meta["m_bits"], meta["k"]
+    ).localCheckpoint(eager=True)
+    definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+    if suspects.isEmpty():
+        # every key is definitely new — no warehouse scan this batch
+        return definite
+    existing = read_table_or_empty(spark, warehouse_path, schema)
+    return definite.unionByName(anti_join_on_key(suspects, existing, key))
+
+
 def stream_incremental_append(
     spark: SparkSession,
     source_dir: str,
@@ -71,48 +114,9 @@ def stream_incremental_append(
         # as the batch path's incremental_new_rows.
         rows = rows.filter(F.col(key).isNotNull())
         rows = rows.dropDuplicates([key])
-        if bloom_store_path is not None:
-            from ..llm import bloom as B
-
-            meta = B.load_bloom_meta(spark, bloom_store_path)
-            flt = B.read_bloom_store(spark, bloom_store_path)
-            if flt.isEmpty():
-                # coverage guard: an EMPTY filter guarding a NON-EMPTY
-                # warehouse means the store was created without seeding
-                # (or its segments were lost) — every probe would answer
-                # definitely-new and the fast path would re-append known
-                # keys with no error. Refuse loudly; the operator seeds
-                # via create_bloom_store(seed_df=warehouse).
-                probe = read_table_or_empty(
-                    spark, warehouse_path, rows.schema
-                )
-                if not probe.isEmpty():
-                    raise ValueError(
-                        f"bloom store {bloom_store_path!r} is empty but "
-                        f"warehouse {warehouse_path!r} has rows — the "
-                        "definitely-new fast path would re-append known "
-                        "keys; recreate the store seeded from the "
-                        "warehouse (create_bloom_store(seed_df=...))"
-                    )
-            probed = B.probe_bloom(
-                rows, key, flt, meta["m_bits"], meta["k"]
-            ).localCheckpoint(eager=True)
-            definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            if suspects.isEmpty():
-                # every key is definitely new — skip the warehouse
-                # entirely (no scan is scheduled this batch)
-                fresh = definite
-            else:
-                existing = read_table_or_empty(
-                    spark, warehouse_path, rows.schema
-                )
-                fresh = definite.unionByName(
-                    anti_join_on_key(suspects, existing, key)
-                )
-        else:
-            existing = read_table_or_empty(spark, warehouse_path, rows.schema)
-            fresh = anti_join_on_key(rows, existing, key)
+        fresh = _unseen_rows(
+            spark, rows, key, warehouse_path, rows.schema, bloom_store_path
+        )
         # materialize once: isEmpty would otherwise run the whole
         # anti-join plan and the write would run it AGAIN from scratch
         fresh = fresh.localCheckpoint(eager=True)
@@ -170,32 +174,17 @@ def _stream_gate_id(spark: SparkSession, checkpoint_dir: str) -> str:
     own earlier stats row) and rolls over when the checkpoint is wiped
     (new id → the old epoch's rows count as plain history, never as
     "my own attempt")."""
-    import json as _json
-
-    from ..sinks.fsutil import hadoop_fs
+    from ..sinks.fsutil import hadoop_fs, read_json
 
     fs, hpath = hadoop_fs(spark, checkpoint_dir)
-    p = hpath(checkpoint_dir.rstrip("/") + "/metadata")
-    if not fs.exists(p):
+    p = checkpoint_dir.rstrip("/") + "/metadata"
+    if not fs.exists(hpath(p)):
         # foreachBatch only runs after the stream wrote its metadata;
         # a missing file means a non-standard harness drove the sink
         # directly — degrade to a shared epoch (budget still enforced;
         # replay self-exclusion keys on batch_id alone)
         return "epoch0"
-    jvm = spark._jvm
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(p), "UTF-8")
-    )
-    try:
-        chunks = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            chunks.append(line)
-    finally:
-        reader.close()
-    return str(_json.loads("".join(chunks))["id"])
+    return str(read_json(fs, hpath, p)["id"])
 
 
 def read_consumed_tokens(
@@ -373,16 +362,11 @@ def stream_ingest_with_budget(
       warehouse ONCE (the heal path is the only O(corpus) aggregation
       left; round 7 ran it every batch).
     """
-    from ..operators.dedup import anti_join_on_key as _anti
-
     if stats_path is None:
         stats_path = budget_stats_path(warehouse_path)
-    gate_cache: dict[str, str] = {}
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        if "id" not in gate_cache:
-            gate_cache["id"] = _stream_gate_id(spark, checkpoint_dir)
-        gate_id = gate_cache["id"]
+        gate_id = _stream_gate_id(spark, checkpoint_dir)
         rows = batch.filter(F.col(key).isNotNull()).dropDuplicates([key])
         stats_probe = read_table_or_empty(
             spark, stats_path, _budget_stats_schema(source_col)
@@ -400,43 +384,9 @@ def stream_ingest_with_budget(
         consumed = read_consumed_tokens(
             spark, stats_path, source_col, exclude=(gate_id, batch_id)
         )
-        if bloom_store_path is not None:
-            from ..llm import bloom as B
-
-            meta = B.load_bloom_meta(spark, bloom_store_path)
-            flt = B.read_bloom_store(spark, bloom_store_path)
-            if flt.isEmpty():
-                # same coverage guard as stream_incremental_append: an
-                # empty filter over a non-empty warehouse would wave
-                # every known key through the definitely-new fast path
-                probe = read_table_or_empty(
-                    spark, warehouse_path, batch.schema
-                )
-                if not probe.isEmpty():
-                    raise ValueError(
-                        f"bloom store {bloom_store_path!r} is empty but "
-                        f"warehouse {warehouse_path!r} has rows — seed "
-                        "the store from the warehouse first"
-                    )
-            probed = B.probe_bloom(
-                rows, key, flt, meta["m_bits"], meta["k"]
-            ).localCheckpoint(eager=True)
-            definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            suspects = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            if suspects.isEmpty():
-                # every key is definitely new — the warehouse is not
-                # read AT ALL this batch
-                fresh = definite
-            else:
-                existing = read_table_or_empty(
-                    spark, warehouse_path, batch.schema
-                )
-                fresh = definite.unionByName(
-                    _anti(suspects, existing, key)
-                )
-        else:
-            existing = read_table_or_empty(spark, warehouse_path, batch.schema)
-            fresh = _anti(rows, existing, key)
+        fresh = _unseen_rows(
+            spark, rows, key, warehouse_path, batch.schema, bloom_store_path
+        )
         accepted = budget_filter(
             fresh, consumed, budgets, key, source_col, text_col
         ).localCheckpoint(eager=True)
@@ -1146,8 +1096,6 @@ def stream_ingest_with_boilerplate(
     history."""
     from ..llm import passagefreq as PF
 
-    _cache: dict[str, object] = {}
-
     def _sink(batch: DataFrame, batch_id: int) -> None:
         rows = (
             batch.filter(F.col(id_col).isNotNull())
@@ -1176,13 +1124,7 @@ def stream_ingest_with_boilerplate(
         from ..llm.dedup import passage_rows
 
         gate_id = _stream_gate_id(spark, checkpoint_dir)
-        if "pf_meta" not in _cache:
-            # store meta is immutable for the store's lifetime — one
-            # read per stream, not one whole job per micro-batch
-            _cache["pf_meta"] = PF.load_passage_freq_meta(
-                spark, store_path
-            )
-        meta = _cache["pf_meta"]
+        meta = PF.load_passage_freq_meta(spark, store_path)
         chunks = passage_rows(
             fresh, meta["block"], text_col, id_col
         ).localCheckpoint(eager=True)

@@ -305,7 +305,6 @@ def stream_ingest_unified(
     shuffle width (restored after each batch), the same knob as the
     media gate."""
     paths = unified_store_paths(stores_root)
-    gate_cache: dict[str, str] = {}
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         if gate_shuffle_partitions is not None:
@@ -324,9 +323,7 @@ def stream_ingest_unified(
     def _gate_body(batch: DataFrame, batch_id: int) -> None:
         from ..sinks.fsutil import hadoop_fs
 
-        if "id" not in gate_cache:
-            gate_cache["id"] = _stream_gate_id(spark, checkpoint_dir)
-        gate_id = gate_cache["id"]
+        gate_id = _stream_gate_id(spark, checkpoint_dir)
         run_id = str(int(batch_id))
 
         def _label(phase: str) -> None:
@@ -383,13 +380,7 @@ def stream_ingest_unified(
         ).localCheckpoint(eager=True)
         from ..llm.dedup import passage_rows
 
-        if "pf_meta" not in gate_cache:
-            # store meta is immutable for the store's lifetime — one
-            # read per stream, not one whole job per micro-batch
-            gate_cache["pf_meta"] = PF.load_passage_freq_meta(
-                spark, paths["passages"]
-            )
-        meta = gate_cache["pf_meta"]
+        meta = PF.load_passage_freq_meta(spark, paths["passages"])
         chunks = passage_rows(
             surv_docs, meta["block"], text_col, id_col
         ).localCheckpoint(eager=True)
@@ -470,13 +461,8 @@ def stream_ingest_unified(
             appends[store].write.mode("append").parquet(paths[store])
 
         def _commit_kmv() -> None:
-            if "kmv_meta" not in gate_cache:
-                gate_cache["kmv_meta"] = KV.load_kmv_meta(
-                    spark, paths["kmv"]
-                )
             KV.append_to_kmv_store(
-                spark, paths["kmv"], accepted, source_col, "text_clean",
-                meta=gate_cache["kmv_meta"],
+                spark, paths["kmv"], accepted, source_col, "text_clean"
             )
 
         commits = [partial(_commit_hashes, store) for store in appends]

@@ -147,14 +147,12 @@ class TestBloomStore:
         double hash) must be refused: probing its bit array with the
         version-2 nonzero step yields false negatives, which would let
         the definitely-new fast path re-append warehouse keys."""
-        import json
+        from etl_procedure_codes_crawler_spark.llm.store import write_meta
 
         path = str(tmp_path / "bloom")
         B.create_bloom_store(spark, path, n_items=100)
         stale = {"m_bits": 1024, "k": 7, "fpr": 0.01, "version": 1}
-        spark.createDataFrame(
-            [(json.dumps(stale),)], "meta string"
-        ).repartition(1).write.mode("overwrite").parquet(path + "/meta")
+        write_meta(spark, path, stale)
         with pytest.raises(B.BloomStoreVersionError, match="version 1"):
             B.load_bloom_meta(spark, path)
         # rebuild (create over the same path) heals it

@@ -658,15 +658,12 @@ class TestPassageFreqStore:
         assert final == after
 
     def test_version1_store_refused(self, spark, tmp_path):
-        import json as _json
-
         from etl_procedure_codes_crawler_spark.llm import passagefreq as PF
+        from etl_procedure_codes_crawler_spark.llm.store import write_meta
 
         store = str(tmp_path / "store")
         PF.create_passage_freq_store(spark, store, block=4)
         stale = {"block": 4, "version": 1}
-        spark.createDataFrame(
-            [(_json.dumps(stale),)], "meta string"
-        ).repartition(1).write.mode("overwrite").parquet(store + "/meta")
+        write_meta(spark, store, stale)
         with pytest.raises(PF.PassageFreqStoreVersionError, match="version 1"):
             PF.load_passage_freq_meta(spark, store)

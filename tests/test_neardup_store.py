@@ -409,15 +409,13 @@ class TestDegenerateBucketCap:
 
 
 def _build_v1_store(spark, path, docs):
-    import json as _json
+    from etl_procedure_codes_crawler_spark.llm.store import write_meta
 
     NS._sig_array(docs, "text", "doc_id", 3, 32).write.mode(
         "overwrite"
     ).parquet(path + "/signatures")
     meta = {"k": 3, "bands": 8, "rows_per_band": 4}  # no version key
-    spark.createDataFrame([( _json.dumps(meta),)], "meta string").repartition(
-        1
-    ).write.mode("overwrite").parquet(path + "/meta")
+    write_meta(spark, path, meta)
 
 
 def test_v1_store_queries_and_appends_without_buckets_column(spark, tmp_path):
